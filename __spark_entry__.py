@@ -317,6 +317,7 @@ def q15_exact_dup_clusters(spark, sf):
     in SQL; the passage replay groups on the shingle STRINGS, so it is
     independent of the engine's xxhash64 shingle keys."""
     from donut_spark.operators.dedup import duplicated_passages
+    from donut_spark.plans.cache import attach_persisted, capture
 
     d = _sf(sf)(spark, "documents")
     exact = (
@@ -334,17 +335,19 @@ def q15_exact_dup_clusters(spark, sf):
     # persist=True: the positions frame (one row per token) feeds both
     # the doc-frequency agg and the position join; computing it once and
     # spilling beats the second full shingle pass (measured 1.6-1.7x on
-    # the 50k-doc staging, round 6). Intra-query, lineage-backed, handle
-    # rides the result under the plans.cache release contract — not a
-    # cross-run cache.
-    passages = duplicated_passages(d, n=8, persist=True).select(
+    # the 50k-doc staging, round 6). Intra-query, lineage-backed — not a
+    # cross-run cache. The handle would be shed by the .select() below,
+    # so it is captured here and re-attached to the returned union:
+    # release_persisted(result) after consuming frees it.
+    res = capture(duplicated_passages(d, n=8, persist=True))
+    passages = res.frame.select(
         F.lit("passage").alias("family"),
         F.col("doc_id").cast("long").alias("doc_id"),
         "start_tok",
         "end_tok",
         F.col("n_tokens").alias("n"),
     )
-    return exact.unionByName(passages)
+    return attach_persisted(exact.unionByName(passages), res.handles)
 
 
 def q18_grouped_minmax(spark, sf):

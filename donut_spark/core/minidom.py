@@ -200,7 +200,7 @@ def _parse_html_slow(html: str) -> HNode:
 # normalize_dom's block pass pads each DIRECT text child), '<x/>' is
 # start+end without a stack push, end tags pop leniently to the nearest
 # match. Byte-parity is pinned by tests/test_minidom.py's adversarial
-# list + seeded 200k-doc fuzz against _parse_html_slow.
+# list + seeded 20 000-doc fuzz against _parse_html_slow.
 
 # anything that must take the reference path. '<' not followed by a
 # letter (or '/'+letter) covers comments/decls/PIs/'</>'/literal '<'

@@ -38,13 +38,11 @@ from ..sources.fixtures import SPAN_SCHEMA
 __all__ = [
     "extract_spans",
     "extract_spans_json",
-    "extract_text",
     "main_content_udf",
     "clean_table",
     "repair_table",
     "json2token_udf",
     "token2json_udf",
-    "roundtrip_ok_udf",
     "nted_udf",
     "gt_candidates_udf",
     "nted_best_udf",
@@ -284,12 +282,6 @@ def extract_pieces(html_col) -> "F.Column":
 
 
 @F.pandas_udf(StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    """HTML fragment → main-content text (T8 applied document-wide)."""
-    return html.map(lambda h: htmlnorm.extract_main_text(h or ""))
-
-
-@F.pandas_udf(StringType())
 def main_content_udf(html: pd.Series) -> pd.Series:
     """Full crawled page → main-content text: readability-style block
     pruning (kill tags, boilerplate names, link-density) before the
@@ -353,11 +345,6 @@ def json2token_udf(tree_json: pd.Series) -> pd.Series:
 @F.pandas_udf(StringType())
 def token2json_udf(tokens: pd.Series) -> pd.Series:
     return tokens.map(tree.token2json_str)
-
-
-@F.pandas_udf(BooleanType())
-def roundtrip_ok_udf(tree_json: pd.Series) -> pd.Series:
-    return tree_json.map(tree.roundtrip_ok)
 
 
 # ---- metrics ----

@@ -7,11 +7,11 @@ weights, the unit of durability is a *bucket* of documents
 
 1. reads the commit log (marker files under ``<out>/_commits/``),
 2. anti-filters already-committed buckets from the input,
-3. processes and writes remaining buckets partitioned by bucket id
-   (each bucket directory is written atomically by Spark's committer),
-   routing rows with a non-null ``_error`` column to a bucket-
-   partitioned ``quarantine/`` beside ``data/`` (S11: data/ holds only
-   good rows, identically to the non-resume path),
+3. processes the remaining buckets and writes them through the job's
+   one sink (``operators.sink.write_outputs``), partitioned by bucket id
+   (each bucket directory is written atomically by Spark's committer):
+   ``data/``, ``quarantine/`` and the per-bucket ``lineage/`` audit hold
+   exactly what a plain run writes, plus the ``_bucket`` partitioning,
 4. appends one marker per bucket that completed.
 
 Any partition/bucket can therefore resume after a crash without
@@ -28,7 +28,8 @@ from typing import Callable, List
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from .sink import write_outputs
 
 __all__ = ["committed_buckets", "mark_committed", "run_resumable"]
 
@@ -86,15 +87,6 @@ def mark_committed(
         out.close()
 
 
-def _bucket_dirs(spark: SparkSession, dir_str: str) -> dict[int, str]:
-    """{bucket id: child path} of the ``_bucket=`` partition dirs."""
-    return {
-        int(name.split("=")[1]): f"{dir_str}/{name}"
-        for name in _list_names(spark, dir_str)
-        if name.startswith("_bucket=")
-    }
-
-
 def _remove_orphan_buckets(
     spark: SparkSession, dir_str: str, done: set
 ) -> None:
@@ -104,9 +96,9 @@ def _remove_orphan_buckets(
     dirs are never touched."""
     fs, _ = _fs_for(spark, dir_str)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    for bucket, child in _bucket_dirs(spark, dir_str).items():
-        if bucket not in done:
-            fs.delete(jvm_path(child), True)
+    for name in _list_names(spark, dir_str):
+        if name.startswith("_bucket=") and int(name.split("=")[1]) not in done:
+            fs.delete(jvm_path(f"{dir_str}/{name}"), True)
 
 
 def run_resumable(
@@ -114,24 +106,18 @@ def run_resumable(
     input_df: DataFrame,
     transform: Callable[[DataFrame], DataFrame],
     out_path: str,
-    key: str = "doc_id",
     n_buckets: int = 64,
-    error_col: str = "_error",
 ) -> List[int]:
-    """Run ``transform`` over all not-yet-committed buckets.
+    """Run ``transform`` over all not-yet-committed buckets of
+    ``input_df`` (keyed on ``doc_id``) and write the result through
+    :func:`operators.sink.write_outputs` into ``_bucket=<b>``
+    partitions of ``data/``, ``quarantine/`` and ``lineage/``.
 
-    Returns the list of buckets processed this invocation. Output lands
-    under ``<out_path>/data/_bucket=<b>/``. If the transform output has
-    an ``error_col`` column, errored rows land under
-    ``<out_path>/quarantine/_bucket=<b>/`` instead (and ``error_col``
-    is dropped from data/, matching ``plans.lineage.quarantine_split``
-    in the non-resume path); the transform output is persisted
-    (spill-backed) across the two writes so the extraction kernel runs
-    once, not twice.
+    Returns the list of buckets processed this invocation.
     """
     done = set(committed_buckets(out_path, spark))
     bucketed = input_df.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+        "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     )
     if done:
         bucketed = bucketed.filter(~F.col("_bucket").isin(*done))
@@ -140,78 +126,22 @@ def run_resumable(
     if "_bucket" not in result.columns:
         raise ValueError("transform must preserve the _bucket column")
 
-    data_dir = f"{out_path}/data"
-    quarantine_dir = f"{out_path}/quarantine"
-    # Dynamic partition overwrite: only the _bucket= partitions present in
-    # this run are replaced, committed partitions are untouched. This
-    # closes the crash window between the parquet job committing and
+    # The sink's dynamic partition overwrite replaces only the _bucket=
+    # partitions present in this run; committed partitions are untouched.
+    # This closes the crash window between the parquet job committing and
     # mark_committed running — a re-run REPLACES the orphaned partitions
     # instead of appending duplicate rows (idempotence doesn't depend on
-    # the marker write landing).
-    _remove_orphan_buckets(spark, data_dir, done)
-    _remove_orphan_buckets(spark, quarantine_dir, done)
-    # lineage too: an orphaned lineage row would certify (n_rows,
-    # checksum) for a bucket whose data/quarantine we just deleted —
-    # the audit must never outlive the data it audits
-    _remove_orphan_buckets(spark, f"{out_path}/lineage", done)
-
-    split = error_col in result.columns
-    if split:
-        result = result.persist(StorageLevel.MEMORY_AND_DISK)
-        bad = result.filter(F.col(error_col).isNotNull())
-        good = result.filter(F.col(error_col).isNull()).drop(error_col)
-    else:
-        bad, good = None, result
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        good.write.mode("overwrite").partitionBy("_bucket").parquet(data_dir)
-        if split:
-            bad.write.mode("overwrite").partitionBy("_bucket").parquet(
-                quarantine_dir
-            )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        if split:
-            result.unpersist()
+    # the marker write landing). Lineage too: an orphaned lineage row
+    # would certify a bucket whose data/quarantine we just deleted — the
+    # audit must never outlive the data it audits.
+    for sub in ("data", "quarantine", "lineage"):
+        _remove_orphan_buckets(spark, f"{out_path}/{sub}", done)
+    write_outputs(spark, result, out_path)
 
     # Every non-committed bucket was processed this run (the anti-filter
     # leaves exactly those in the input), so ALL of them commit — a
     # bucket whose transform output is EMPTY is done too; deriving the
     # commit set from output listings would recompute it forever.
     processed = sorted(b for b in range(n_buckets) if b not in done)
-    # buckets with files in this run's output (for the lineage audit)
-    written = sorted(
-        b for b in _bucket_dirs(spark, data_dir) if b not in done
-    )
-
-    # Per-bucket lineage ALONGSIDE the commit markers (north-rule: any
-    # partition can resume idempotently AND prove what it holds): row
-    # count + order-insensitive checksum per bucket, recomputed from the
-    # files just written — auditing what's on disk, not the plan. Same
-    # dynamic-overwrite discipline as the data, so a resumed bucket
-    # replaces its lineage row.
-    if written:
-        fresh = spark.read.parquet(data_dir).filter(F.col("_bucket").isin(written))
-        payload = [c for c in fresh.columns if c != "_bucket"]
-        lineage = (
-            fresh.withColumn(
-                "_rowhash", F.xxhash64(F.to_json(F.struct(*payload)))
-            )
-            .groupBy("_bucket")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.expr("bit_xor(_rowhash)").alias("checksum"),
-            )
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            lineage.write.mode("overwrite").partitionBy("_bucket").parquet(
-                f"{out_path}/lineage"
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
     mark_committed(out_path, processed, spark)
     return processed

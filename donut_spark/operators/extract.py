@@ -29,7 +29,6 @@ __all__ = [
     "extract_documents",
     "evaluate_extraction",
     "run_flagship",
-    "run_flagship_with_quarantine",
 ]
 
 _RENUMBER = (
@@ -250,38 +249,19 @@ def run_flagship(
     limit: int | None = None,
 ) -> DataFrame:
     """End-to-end: synthesize spans table → extract → evaluate →
-    quarantine errored docs (good rows only; see
-    :func:`run_flagship_with_quarantine` for the error frame).
+    quarantine errored docs (good rows only).
 
-    ``mode="doc"`` uses the fused single-Python-node plan; ``"span"``
+    ``mode="doc"`` uses the fused single-Python-node plan, whose error
+    channel routes a poison document to ``_error`` instead of failing
+    the job (reference parity: `test.py:147-152,187-189`); ``"span"``
     the explode/reassemble plan. Aggregate with ``df.agg(
     avg("exact_match"), avg("roundtrip_ok"), avg("nted"))`` for the
     corpus-level metrics (A1/A2 analogues).
-    """
-    good, _bad = run_flagship_with_quarantine(spark, sf_dir, mode=mode, limit=limit)
-    return good
-
-
-def run_flagship_with_quarantine(
-    spark: SparkSession,
-    sf_dir: str,
-    mode: str = "doc",
-    limit: int | None = None,
-):
-    """Flagship with the S11 error side-channel: returns (good, quarantine).
-
-    Reference parity: `test.py:147-152,187-189` — failed samples are
-    captured and persisted, the run continues. The error column is
-    produced INSIDE the fused UDF so one poison document can never fail
-    a 10^12-row job.
     """
     from ..plans.lineage import quarantine_split
 
     spans = build_spans_table(spark, sf_dir, limit=limit)
     if mode == "doc":
-        return quarantine_split(extract_and_evaluate(spans))
-    extracted = extract_documents(spans, mode=mode)
-    evaluated = evaluate_extraction(extracted)
-    if "_error" not in evaluated.columns:
-        evaluated = evaluated.withColumn("_error", F.lit(None).cast("string"))
-    return quarantine_split(evaluated)
+        good, _bad = quarantine_split(extract_and_evaluate(spans))
+        return good
+    return evaluate_extraction(extract_documents(spans, mode=mode))

@@ -431,7 +431,8 @@ def materialize_pdf_table(
     path = os.path.join(out_root, f"pdf_{name}")
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    df = synth_pdf_table(spark, load_spans(spark, sf_dir))
+    spans = spark.read.parquet(materialize_spans(spark, sf_dir, out_root))
+    df = synth_pdf_table(spark, spans)
     df.repartition(32, "doc_id").write.mode("overwrite").parquet(path)
     return path
 

@@ -26,10 +26,11 @@ Output layout under ``--output``:
     quarantine/  rows whose extraction errored (``_error`` column) —
                  the job never fails on a poison document; ``_bucket=``
                  partitioned in resume mode
-    lineage/     audit rows: per-partition (n_docs, n_spans, checksum)
-                 in plain mode; per-bucket (n_rows, checksum) written by
-                 run_resumable in resume mode (order-insensitive XOR
-                 checksums in both)
+    lineage/     audit rows (n_docs, n_spans, checksum) over the data/
+                 files: per Spark partition in plain mode, per ``_bucket=``
+                 partition in resume mode; checksum is the order-
+                 insensitive XOR of xxhash64(doc_id, to_json(extracted)),
+                 so plain and resumed runs of one input give one global XOR
     _commits/    bucket commit log (resume mode)
 
 All session tuning comes from ``donut_spark.sources.session.ENGINE_CONF``
@@ -59,10 +60,8 @@ def main() -> None:
     # Imports AFTER argparse: on an executor-shipped zip this module is
     # driver-side, but failing fast on bad args shouldn't need the JVM.
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     from donut_spark.operators.extract import extract_and_evaluate, extract_documents
-    from donut_spark.plans.lineage import lineage_metrics, quarantine_split
     from donut_spark.sources.session import ENGINE_CONF
 
     builder = SparkSession.builder.appName("donut_spark_extract")
@@ -83,46 +82,24 @@ def main() -> None:
             return pdf_documents_from_table(df)
         if args.mode == "doc" and "gt_parse" in df.columns:
             return extract_and_evaluate(df)
-        out = extract_documents(df, mode=args.mode)
-        if "_error" not in out.columns:
-            out = out.withColumn("_error", F.lit(None).cast("string"))
-        return out
+        return extract_documents(df, mode=args.mode)
 
     if args.resume:
         from donut_spark.operators.checkpoint import run_resumable
 
-        # extract() preserves every input column, so _bucket flows
-        # through. run_resumable itself routes errored rows to a
-        # bucket-partitioned quarantine/ BEFORE the data write (data/
-        # holds only good rows, identical semantics to the non-resume
-        # path) and writes the per-bucket lineage audit to lineage/ —
-        # the flat partition-level lineage_metrics pass is skipped so
-        # it can't clobber that per-bucket audit.
+        # extract() preserves every input column, so _bucket flows through
         done = run_resumable(
             spark, spans, extract, args.output, n_buckets=args.n_buckets
         )
-        result = spark.read.parquet(f"{args.output}/data")
         print(f"resumable run: processed buckets {done}")
     else:
-        from pyspark.storagelevel import StorageLevel
+        from donut_spark.operators.sink import write_outputs
 
-        # persist across the good/bad writes: the two quarantine_split
-        # filters are views over the SAME lazy frame, and without the
-        # persist the second write re-runs the whole extraction kernel
-        # (the dominant cost) just to collect the errored rows
-        evaluated = extract(spans).persist(StorageLevel.MEMORY_AND_DISK)
-        result, bad = quarantine_split(evaluated)
-        result.write.mode("overwrite").parquet(f"{args.output}/data")
-        bad.write.mode("overwrite").parquet(f"{args.output}/quarantine")
-        evaluated.unpersist()
-        result = spark.read.parquet(f"{args.output}/data")
-        lineage_metrics(result).write.mode("overwrite").parquet(
-            f"{args.output}/lineage"
-        )
-    n = result.count()
+        write_outputs(spark, extract(spans), args.output)
+    n = spark.read.parquet(f"{args.output}/data").count()
     print(f"extracted {n} documents -> {args.output}/data")
-    # leak audit: the evaluated frame was the only persist and was
-    # released after its two consumers — repeated runs must stay flat
+    # leak audit: the sink's persist is released after its consumers —
+    # repeated runs must stay flat
     from donut_spark.plans.cache import persistent_rdd_ids
 
     print(f"residual cached rdds: {len(persistent_rdd_ids(spark.sparkContext))}")

@@ -1065,6 +1065,21 @@ def test_pdf_documents_from_table_contract(spark):
         out.unpersist()
 
 
+def test_materialize_pdf_table_writes_under_out_root(spark, tmp_path):
+    """Both the PDF table and the spans table it is synthesized from land
+    under ``out_root``, never under the default fixtures directory."""
+    import os
+
+    from donut_spark.sources.fixtures import materialize_pdf_table
+    from tests.conftest import SF_SMALL
+
+    path = materialize_pdf_table(spark, SF_SMALL, str(tmp_path))
+    spans = tmp_path / f"spans_{os.path.basename(SF_SMALL)}"
+    assert path == str(tmp_path / f"pdf_{os.path.basename(SF_SMALL)}")
+    assert os.path.exists(spans / "_SUCCESS")
+    assert spark.read.parquet(path).count() == spark.read.parquet(str(spans)).count()
+
+
 def test_streaming_pdf_ingest_matches_batch(spark, tmp_path):
     """The streaming PDF ingest twin is the same stateless kernel above
     a file-stream source: per-span rows match the batch parse exactly,

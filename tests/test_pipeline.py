@@ -15,6 +15,37 @@ from donut_spark.sources.fixtures import build_spans_table, synth_doc
 from tests.conftest import SF_SMALL
 
 
+def _one_span_per_text(df):
+    """Stand-in extraction for the checkpoint tests: each document's
+    text as its single extracted span."""
+    return df.withColumn(
+        "extracted",
+        F.array(F.struct(F.lit("text").alias("kind"), F.col("text").alias("text"))),
+    )
+
+
+def _docs_with_poison(spark, n):
+    """``n`` healthy SynthDoG-style documents plus one recursion-bomb
+    HTML document (``doc_id`` 'poison') that the fused kernel's error
+    channel quarantines."""
+    from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA
+
+    rows = []
+    for i in range(n):
+        spans, expected, gt = synth_doc(f"ok_{i}", "alpha beta gamma delta")
+        rows.append((f"ok_{i}", spans, expected, gt))
+    bomb = "<div>" * 4000 + "x" + "</div>" * 4000
+    rows.append(
+        (
+            "poison",
+            [{"kind": "text", "text": bomb, "media_ref": "", "offset": 0}],
+            [],
+            '{"doc": {"title": "p"}}',
+        )
+    )
+    return spark.createDataFrame(rows, SPANS_TABLE_SCHEMA)
+
+
 def test_synth_doc_deterministic():
     a = synth_doc("doc_1", "alpha beta gamma delta epsilon")
     b = synth_doc("doc_1", "alpha beta gamma delta epsilon")
@@ -153,13 +184,10 @@ def test_checkpoint_resume(spark, tmp_path):
         F.col("doc_id").cast("string"), "text"
     )
 
-    def transform(df):
-        return df.withColumn("n", F.length("text"))
-
-    first = run_resumable(spark, docs, transform, out, n_buckets=8)
+    first = run_resumable(spark, docs, _one_span_per_text, out, n_buckets=8)
     assert len(first) == 8
     # second run is a no-op
-    second = run_resumable(spark, docs, transform, out, n_buckets=8)
+    second = run_resumable(spark, docs, _one_span_per_text, out, n_buckets=8)
     assert second == []
     assert committed_buckets(out) == list(range(8))
     # all rows present exactly once
@@ -168,7 +196,7 @@ def test_checkpoint_resume(spark, tmp_path):
     # per-bucket lineage written alongside the commit log
     lineage = spark.read.parquet(os.path.join(out, "lineage"))
     assert lineage.count() == 8
-    assert lineage.agg(F.sum("n_rows")).first()[0] == docs.count()
+    assert lineage.agg(F.sum("n_docs")).first()[0] == docs.count()
     assert lineage.filter(F.col("checksum").isNull()).count() == 0
 
 
@@ -185,13 +213,10 @@ def test_checkpoint_crash_window_no_duplicates(spark, tmp_path):
         F.col("doc_id").cast("string"), "text"
     )
 
-    def transform(df):
-        return df.withColumn("n", F.length("text"))
-
-    run_resumable(spark, docs, transform, out, n_buckets=8)
+    run_resumable(spark, docs, _one_span_per_text, out, n_buckets=8)
     # simulate the crash window: data committed, markers lost
     shutil.rmtree(os.path.join(out, "_commits"))
-    reprocessed = run_resumable(spark, docs, transform, out, n_buckets=8)
+    reprocessed = run_resumable(spark, docs, _one_span_per_text, out, n_buckets=8)
     assert len(reprocessed) == 8  # everything re-ran...
     written = spark.read.parquet(os.path.join(out, "data"))
     assert written.count() == docs.count()  # ...but rows appear exactly once
@@ -212,7 +237,7 @@ def test_checkpoint_resume_routes_quarantine(spark, tmp_path):
     n_total = docs.count()
 
     def transform(df):
-        return df.withColumn(
+        return _one_span_per_text(df).withColumn(
             "_error",
             F.when(F.col("doc_id").cast("long") % 10 == 0, F.lit("poison")),
         )
@@ -229,7 +254,7 @@ def test_checkpoint_resume_routes_quarantine(spark, tmp_path):
     assert data.join(quarantine, "doc_id", "inner").count() == 0
     # lineage audits data/ only (good rows)
     lineage = spark.read.parquet(os.path.join(out, "lineage"))
-    assert lineage.agg(F.sum("n_rows")).first()[0] == n_total - n_bad
+    assert lineage.agg(F.sum("n_docs")).first()[0] == n_total - n_bad
 
 
 def test_salted_two_phase_agg(spark):
@@ -347,23 +372,8 @@ def test_poison_doc_quarantined_not_fatal(spark):
     an error string while every healthy doc still evaluates clean."""
     from donut_spark.operators.extract import extract_and_evaluate
     from donut_spark.plans.lineage import quarantine_split
-    from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA, synth_doc
 
-    rows = []
-    for i in range(6):
-        spans, expected, gt = synth_doc(f"ok_{i}", "alpha beta gamma delta")
-        rows.append((f"ok_{i}", spans, expected, gt))
-    bomb = "<div>" * 4000 + "x" + "</div>" * 4000
-    rows.append(
-        (
-            "poison",
-            [{"kind": "text", "text": bomb, "media_ref": "", "offset": 0}],
-            [],
-            '{"doc": {"title": "p"}}',
-        )
-    )
-    df = spark.createDataFrame(rows, SPANS_TABLE_SCHEMA)
-    good, bad = quarantine_split(extract_and_evaluate(df))
+    good, bad = quarantine_split(extract_and_evaluate(_docs_with_poison(spark, 6)))
     bad_rows = bad.select("doc_id", "_error").collect()
     assert [r.doc_id for r in bad_rows] == ["poison"]
     assert "RecursionError" in bad_rows[0]._error
@@ -675,13 +685,42 @@ def test_checkpoint_empty_output_bucket_still_commits(spark, tmp_path):
     )
 
     def drop_everything(df):
-        return df.filter(F.lit(False)).withColumn("n", F.length("text"))
+        return _one_span_per_text(df.filter(F.lit(False)))
 
     first = run_resumable(spark, docs, drop_everything, out, n_buckets=8)
     assert first == list(range(8))
     assert committed_buckets(out) == list(range(8))
     second = run_resumable(spark, docs, drop_everything, out, n_buckets=8)
     assert second == []
+
+
+def test_plain_and_resume_runs_share_one_lineage(spark, tmp_path):
+    """One sink, one lineage definition: a plain run and an 8-bucket
+    resume run over the same input agree on the global lineage XOR, the
+    documents counted, and the doc_ids in data/ and in quarantine/."""
+    from donut_spark.operators.checkpoint import run_resumable
+    from donut_spark.operators.extract import extract_and_evaluate
+    from donut_spark.operators.sink import write_outputs
+
+    docs = _docs_with_poison(spark, 30)
+    plain, resumed = str(tmp_path / "plain"), str(tmp_path / "resumed")
+    write_outputs(spark, extract_and_evaluate(docs), plain)
+    run_resumable(spark, docs, extract_and_evaluate, resumed, n_buckets=8)
+
+    def outputs(out):
+        lineage = spark.read.parquet(f"{out}/lineage").agg(
+            F.sum("n_docs").alias("n"), F.expr("bit_xor(checksum)").alias("x")
+        ).first()
+        data, quarantine = (
+            {r.doc_id for r in spark.read.parquet(f"{out}/{sub}").collect()}
+            for sub in ("data", "quarantine")
+        )
+        return lineage.n, lineage.x, data, quarantine
+
+    n, xor, data, quarantine = outputs(plain)
+    assert outputs(resumed) == (n, xor, data, quarantine)
+    assert n == len(data) == 30 and quarantine == {"poison"}
+    assert "_bucket" in spark.read.parquet(f"{resumed}/lineage").columns
 
 
 def test_sessionize_late_event_never_moves_end_backward(spark, tmp_path):

@@ -260,6 +260,22 @@ def test_entry_smoke(spark):
     }
 
 
+def test_q15_releases_its_persist(spark):
+    """q15's persisted passage positions ride the returned union, so
+    release_persisted(result) after consuming it leaves no block behind."""
+    from donut_spark.plans.cache import persistent_rdd_ids, release_persisted
+
+    sc = spark.sparkContext
+    # an earlier q15 run in this session may have left the same plan cached;
+    # persist() would then reuse that entry instead of adding one
+    spark.catalog.clearCache()
+    before = persistent_rdd_ids(sc)
+    result = entry_mod.q15_exact_dup_clusters(spark, SF_SMALL)
+    result.collect()
+    release_persisted(result)
+    assert persistent_rdd_ids(sc) == before
+
+
 def test_registry_exactly_fifty_all_oracle_backed():
     """Round-4 advice (medium): the external gate evaluates at most 50
     queries — pin that the registry is EXACTLY 50 and every entry has an
