@@ -838,9 +838,13 @@ def q30_table_ops(spark, sf):
 
 
 def q37_extract_span_parallel(spark, sf):
-    """The span-parallel physical plan (explode → per-span extraction →
-    relational reassembly): per-doc exact-match flags. Oracle-backed on
-    the invariant: every document must match its expected sequence."""
+    """Span-mode extraction: per-doc exact-match flags. Span mode is
+    weight-routed — the span-parallel plan (explode → per-span
+    extraction → relational reassembly) runs only when one document
+    is heavy enough that spreading it beats pinning it to one worker,
+    otherwise the doc plan runs; the output is the same either way.
+    Oracle-backed on the invariant: every document must match its
+    expected sequence."""
     from donut_spark.operators.extract import extract_documents
     from donut_spark.sources.fixtures import load_spans
 

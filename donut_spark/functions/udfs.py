@@ -33,10 +33,8 @@ from pyspark.sql.types import (
 )
 
 from ..core import htmlnorm, metrics, textstats, tree
-from ..sources.fixtures import SPAN_SCHEMA
 
 __all__ = [
-    "extract_spans",
     "extract_spans_json",
     "main_content_udf",
     "clean_table",
@@ -232,17 +230,11 @@ def _extract_eval_fused(spans_json: pd.Series, gt_parse: pd.Series) -> pd.DataFr
     return pd.DataFrame(rows, columns=_EVAL_COLS)
 
 
-def extract_spans(spans_col) -> "F.Column":
-    """Column form: cleaned interleaved spans in reading order."""
-    return F.from_json(
-        _extract_spans_json(F.to_json(spans_col)), ArrayType(SPAN_SCHEMA)
-    )
-
-
 def extract_spans_json(spans_col) -> "F.Column":
-    """Like :func:`extract_spans` but returns the raw JSON string (the
-    kernel's own ``json.dumps`` serialization) — byte-comparable against
-    a fixture ``expected_json`` produced by the same serializer."""
+    """Column form of the doc-parallel extraction body: cleaned spans in
+    reading order as the kernel's own ``json.dumps`` serialization —
+    byte-comparable against a fixture ``expected_json`` produced by the
+    same serializer."""
     return _extract_spans_json(F.to_json(spans_col))
 
 
@@ -276,7 +268,7 @@ def extract_pieces(html_col) -> "F.Column":
     independently, then reassembled relationally
     (`operators/extract.py` mode="span"). Balances UDF compute across
     partitions for the media-heavy document tail. JSON-string transport
-    for the same reason as :func:`extract_spans`.
+    for the reason given above :func:`_extract_one`.
     """
     return F.from_json(_extract_pieces_json(html_col), ArrayType(PIECE_SCHEMA))
 

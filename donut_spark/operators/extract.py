@@ -5,31 +5,55 @@ boilerplate-strip extraction (doc- or span-parallel) → invariant
 evaluation (span-sequence equality, json2token/token2json round-trip,
 nTED) → partitioned sink + per-partition lineage.
 
-Two physical strategies for the extraction step, selected by ``mode``:
+Two physical plans for the extraction step:
 
-* ``doc``  — one Arrow batch row per document; zero extra shuffle; best
+* doc plan  — one Arrow batch row per document; zero extra shuffle; best
   when document sizes are bounded.
-* ``span`` — ``explode`` to spans, extract each independently, reassemble
-  with ``array_sort``/``flatten``/``transform`` (all JVM-side); one
-  shuffle, but the media-heavy tail (a single 10k-span document) spreads
-  over the whole cluster instead of pinning one Python worker. This is
-  the 10^12-document plan (SURVEY.md §4.1).
+* span plan — ``explode`` to spans, extract each independently,
+  reassemble with ``array_sort``/``flatten``/``transform`` (all
+  JVM-side); one shuffle, but the media-heavy tail (a single 10k-span
+  document) spreads over the whole cluster instead of pinning one
+  Python worker. This is the 10^12-document plan (SURVEY.md §4.1).
+
+``mode="doc"`` always runs the doc plan. ``mode="span"`` is
+weight-routed: one JVM aggregate (``max`` and ``sum`` of
+``size(spans)``) over the input decides, and the span plan runs only
+when the heaviest document, pinned to one Python worker by the doc
+plan, would cost more than the span plan's whole critical path (see
+``_span_plan_pays``). Otherwise the doc plan runs. Both plans give the
+same rows and schema for healthy documents. Only the doc plan has an
+error channel: it routes a poison document to ``_error`` (quarantine),
+while on the span plan the same document fails the job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
-from ..functions.udfs import extract_pieces
+from ..functions.udfs import _extract_spans_err, extract_pieces
 from ..plans.skew import decluster, salt_heavy
-from ..sources.fixtures import build_spans_table
+from ..sources.fixtures import SPAN_SCHEMA, build_spans_table
 
 __all__ = [
     "extract_documents",
     "evaluate_extraction",
     "run_flagship",
 ]
+
+# The span plan's cost, in spans of doc-plan Python work, measured with
+# both plans on one job (extract + evaluate_extraction + plain sink) on
+# a 4-vCPU host at 2-8 task slots: its per-span Python time is about
+# twice the doc plan's (traced udfs.python_run_s 6.9 vs 3.8 s on the same
+# spans), and its exchange, two-phase aggregation and re-join add a
+# fixed ~1.5 s, about 50 000 spans' worth. On the doc side of the line
+# ``_span_plan_pays`` draws, the doc plan won every measured input, up
+# to one 100 000-span document in 122 000 spans at 4 slots (4.5 vs
+# 5.3 s); on the other side the span plan won or tied, e.g. one
+# 150 000-span document in 173 000 spans at 4 slots (5.5 vs 6.3 s).
+_SPAN_COST_RATIO = 2
+_SPAN_PLAN_FIXED_SPANS = 50_000
 
 _RENUMBER = (
     "transform(_flat, (p, i) -> named_struct("
@@ -41,7 +65,10 @@ _RENUMBER = (
 def extract_documents(
     spans_df: DataFrame, mode: str = "doc", decluster_input: bool = False
 ) -> DataFrame:
-    """Add an ``extracted`` column of cleaned spans in reading order.
+    """Add an ``extracted`` column of cleaned spans in reading order and
+    an ``_error`` column (NULL unless the doc plan's error channel caught
+    a poison document; the span plan has no error channel, so a poison
+    document fails the job when it runs).
 
     Input must have (doc_id, spans). Non-empty-doc filtering happens
     here (F-family predicate, pushed to the scan by Catalyst since it
@@ -49,32 +76,55 @@ def extract_documents(
     clustered by document weight (e.g. a crawl ordered by site) — it
     buys uniform UDF load for one extra shuffle; leave it off when the
     upstream already hash-distributed (e.g. fixture synthesis).
+
+    ``mode="span"`` runs one aggregate job over the input to pick the
+    plan (module docstring), so it needs a batch frame: a streaming
+    frame raises ``ValueError``.
     """
-    df = spans_df.filter(F.size("spans") > 0)
-
-    if mode == "doc":
-        from pyspark.sql.types import ArrayType
-
-        from ..functions.udfs import _extract_spans_err
-        from ..sources.fixtures import SPAN_SCHEMA
-
-        if decluster_input:
-            df = decluster(df)
-        # error-channel variant of extract_spans: poison docs land in the
-        # _error column (quarantine) instead of failing the task/stream
-        return (
-            df.withColumn("_ex", _extract_spans_err(F.to_json("spans")))
-            .withColumn(
-                "extracted",
-                F.from_json(F.col("_ex.extracted_json"), ArrayType(SPAN_SCHEMA)),
-            )
-            .withColumn("_error", F.col("_ex._error"))
-            .drop("_ex")
-        )
-
-    if mode != "span":
+    if mode not in ("doc", "span"):
         raise ValueError(f"unknown mode: {mode}")
+    if mode == "span" and spans_df.isStreaming:
+        raise ValueError(
+            "extract_documents(mode='span') probes the whole input to pick "
+            "its plan and cannot run on a streaming DataFrame; use mode='doc'"
+        )
+    df = spans_df.filter(F.size("spans") > 0)
+    if mode == "span" and _has_outlier(df):
+        return _span_plan(df)
+    if decluster_input:
+        df = decluster(df)
+    # error-channel extraction: poison docs land in the _error column
+    # (quarantine) instead of failing the task/stream
+    return (
+        df.withColumn("_ex", _extract_spans_err(F.to_json("spans")))
+        .withColumn(
+            "extracted",
+            F.from_json(F.col("_ex.extracted_json"), ArrayType(SPAN_SCHEMA)),
+        )
+        .withColumn("_error", F.col("_ex._error"))
+        .drop("_ex")
+    )
 
+
+def _has_outlier(df: DataFrame) -> bool:
+    """True when the heaviest document makes the span plan the faster
+    one (``_span_plan_pays``). An empty input has no outlier."""
+    size = F.size("spans")
+    heaviest, total = df.agg(F.max(size), F.sum(size)).first()
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    return heaviest is not None and _span_plan_pays(heaviest, total, slots)
+
+
+def _span_plan_pays(heaviest: int, total: int, slots: int) -> bool:
+    """Compare the two plans' critical paths in spans of doc-plan work:
+    the doc plan's is its heaviest document (it cannot finish before the
+    one worker holding that document does), the span plan's is every
+    span spread evenly over the slots at its higher per-span cost, plus
+    its fixed cost. On two slots or fewer the span plan never pays."""
+    return heaviest > _SPAN_COST_RATIO * total / slots + _SPAN_PLAN_FIXED_SPANS
+
+
+def _span_plan(df: DataFrame) -> DataFrame:
     # The exploded side carries ONLY slim per-span fields. Pass-through
     # columns (spans, expected, gt_parse, ...) do NOT ride the explode:
     # an earlier design attached them to the pos==0 row and recovered
@@ -130,7 +180,7 @@ def extract_documents(
     # plan — the exchange moved from post-partial-agg to pre-UDF).
     salted = salt_heavy(exploded, "doc_id", "pos", F.col("_w"))
     salted = salted.repartition(
-        spans_df.sparkSession.sparkContext.defaultParallelism * 2,
+        df.sparkSession.sparkContext.defaultParallelism * 2,
         "doc_id",
         "_salt",
     )
@@ -171,8 +221,14 @@ def extract_documents(
     # through an aggregation buffer. This re-reads the input plan; at
     # corpus scale that is a column-complete parquet scan (cheap next
     # to the Python extraction), and synthesized inputs should be
-    # materialized first (bench/fixtures do).
-    return df.join(reassembled, "doc_id")
+    # materialized first (bench/fixtures do). The cast and the NULL
+    # _error give the doc plan's output schema: its from_json is
+    # all-nullable, the renumbering transform is not.
+    return df.join(reassembled, "doc_id").select(
+        *df.columns,
+        F.col("extracted").cast(ArrayType(SPAN_SCHEMA)),
+        F.lit(None).cast("string").alias("_error"),
+    )
 
 
 def evaluate_extraction(df: DataFrame) -> DataFrame:
@@ -213,10 +269,7 @@ def extract_and_evaluate(spans_df: DataFrame, decluster_input: bool = False) -> 
     extract_documents(df, "doc"))`` but with half the Python workers and
     Arrow hops per task — the plan that survives wide parallelism.
     """
-    from pyspark.sql.types import ArrayType
-
     from ..functions.udfs import _extract_eval_fused
-    from ..sources.fixtures import SPAN_SCHEMA
 
     df = spans_df.filter(F.size("spans") > 0)
     if decluster_input:
@@ -251,17 +304,20 @@ def run_flagship(
     """End-to-end: synthesize spans table → extract → evaluate →
     quarantine errored docs (good rows only).
 
-    ``mode="doc"`` uses the fused single-Python-node plan, whose error
-    channel routes a poison document to ``_error`` instead of failing
-    the job (reference parity: `test.py:147-152,187-189`); ``"span"``
-    the explode/reassemble plan. Aggregate with ``df.agg(
-    avg("exact_match"), avg("roundtrip_ok"), avg("nted"))`` for the
-    corpus-level metrics (A1/A2 analogues).
+    ``mode="doc"`` uses the fused single-Python-node plan; ``"span"`` the
+    weight-routed ``extract_documents(mode="span")``. A poison document
+    lands in ``_error`` and is dropped here whenever the doc plan runs
+    (reference parity: `test.py:147-152,187-189`); on the span plan it
+    fails the job. Aggregate with ``df.agg(avg("exact_match"),
+    avg("roundtrip_ok"), avg("nted"))`` for the corpus-level metrics
+    (A1/A2 analogues).
     """
     from ..plans.lineage import quarantine_split
 
     spans = build_spans_table(spark, sf_dir, limit=limit)
     if mode == "doc":
-        good, _bad = quarantine_split(extract_and_evaluate(spans))
-        return good
-    return evaluate_extraction(extract_documents(spans, mode=mode))
+        evaluated = extract_and_evaluate(spans)
+    else:
+        evaluated = evaluate_extraction(extract_documents(spans, mode=mode))
+    good, _bad = quarantine_split(evaluated)
+    return good

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["decluster", "maybe_decluster", "salt_heavy", "with_weight_bucket"]
+__all__ = ["decluster", "maybe_decluster", "salt_heavy"]
 
 
 def decluster(df: DataFrame, key: str = "doc_id", num_partitions: int | None = None) -> DataFrame:
@@ -64,11 +64,6 @@ def maybe_decluster(
     if source_partitions >= target:
         return df
     return df.repartition(target * 2, F.col(key))
-
-
-def with_weight_bucket(df: DataFrame, weight: Column, heavy_threshold: int = 48) -> DataFrame:
-    """Tag rows with a boolean heavy flag from a weight expression."""
-    return df.withColumn("_heavy", weight >= F.lit(heavy_threshold))
 
 
 def salt_heavy(

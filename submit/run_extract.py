@@ -14,6 +14,15 @@ Input (``--modality spans``, default): a table of interleaved documents
 [, expected, gt_parse])`` — parquet or (when the session has an Iceberg
 catalog configured) an Iceberg table name.
 
+``--mode doc`` (default) runs the doc-parallel kernel: one Python row
+per document, no shuffle. ``--mode span`` is weight-routed: one
+aggregate over the input picks the plan, and the span-parallel
+explode/shuffle plan runs only when one document is heavy enough that
+spreading it beats pinning it to one worker (in practice well over
+100 000 spans at 4 task slots); otherwise the doc plan runs. Both give
+the same rows for healthy documents, but only the doc plan quarantines
+a poison document: on the span plan it fails the job.
+
 Input (``--modality pdf``): a table of native documents ``(doc_id
 string, content binary)`` holding real PDF bytes; the layout parser
 (core/pdf.py via operators/pdfparse.py) recovers the interleaved span
@@ -46,7 +55,13 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--mode", choices=("doc", "span"), default="doc")
+    ap.add_argument(
+        "--mode", choices=("doc", "span"), default="doc",
+        help="doc: one Python row per document, no shuffle; span: "
+             "weight-routed — the span-parallel explode/shuffle plan only "
+             "when one document is heavy enough that spreading it beats "
+             "pinning it to one worker, else the doc plan",
+    )
     ap.add_argument(
         "--modality", choices=("spans", "pdf"), default="spans",
         help="input shape: interleaved span tables (default) or native "

@@ -46,6 +46,35 @@ def _docs_with_poison(spark, n):
     return spark.createDataFrame(rows, SPANS_TABLE_SCHEMA)
 
 
+def _with_outlier(spark, df):
+    """``df`` plus one SynthDoG-style document holding twice as many spans
+    as all of ``df`` together. Test-sized, so ``extract_documents(
+    mode="span")`` routes it to the span plan only under
+    ``span_plan_has_no_fixed_cost``."""
+    from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA
+
+    n = df.agg(F.sum(F.size("spans"))).first()[0]
+    spans, expected, gt = synth_doc("outlier", "alpha beta gamma delta", n_text=n, n_media=n)
+    heavy = spark.createDataFrame([("outlier", spans, expected, gt)], SPANS_TABLE_SCHEMA)
+    return df.unionByName(heavy)
+
+
+@pytest.fixture
+def span_plan_has_no_fixed_cost(monkeypatch):
+    """Zero the span plan's fixed cost in the routing rule, so a
+    test-sized outlier document (``_with_outlier``) takes the span plan
+    on the suite's 8 task slots."""
+    from donut_spark.operators import extract
+
+    monkeypatch.setattr(extract, "_SPAN_PLAN_FIXED_SPANS", 0)
+
+
+def _plan_ran(df):
+    """Which extraction plan ``df`` carries: the salted span plan or the
+    one-Arrow-node doc plan."""
+    return "span" if "_salt" in df._jdf.queryExecution().optimizedPlan().toString() else "doc"
+
+
 def test_synth_doc_deterministic():
     a = synth_doc("doc_1", "alpha beta gamma delta epsilon")
     b = synth_doc("doc_1", "alpha beta gamma delta epsilon")
@@ -82,33 +111,33 @@ def test_flagship_invariants_doc_mode(spark):
     assert agg.nted == 1.0
 
 
-def test_span_mode_matches_doc_mode(spark):
-    spans = build_spans_table(spark, SF_SMALL, limit=80)
-    doc = extract_documents(spans, mode="doc").select("doc_id", "extracted")
-    span = extract_documents(spans, mode="span").select("doc_id", "extracted")
-    joined = doc.alias("d").join(span.alias("s"), "doc_id")
+def test_span_mode_matches_doc_mode(spark, span_plan_has_no_fixed_cost):
+    spans = _with_outlier(spark, build_spans_table(spark, SF_SMALL, limit=80))
+    doc = extract_documents(spans, mode="doc")
+    span = extract_documents(spans, mode="span")
+    assert (_plan_ran(doc), _plan_ran(span)) == ("doc", "span")
+    joined = doc.select("doc_id", "extracted").alias("d").join(
+        span.select("doc_id", "extracted").alias("s"), "doc_id"
+    )
+    assert joined.count() == 81
     n_diff = joined.filter(F.col("d.extracted") != F.col("s.extracted")).count()
     assert n_diff == 0
 
 
-def test_span_mode_salted_two_phase_plan(spark):
+def test_span_mode_salted_two_phase_plan(spark, span_plan_has_no_fixed_cost):
     """The span-mode reassembly must be the TWO-PHASE salted agg
     (plans/skew.salt_heavy): a partial collect per (doc_id, _salt)
     below the final per-doc merge, so one 10k-span document fans its
     collect work over 16 reducers instead of pinning one. Plan-pinned:
     a _salt grouping key and two collect aggregates."""
-    spans = build_spans_table(spark, SF_SMALL, limit=20)
-    plan = (
-        extract_documents(spans, mode="span")
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "_salt" in plan, plan
+    spans = _with_outlier(spark, build_spans_table(spark, SF_SMALL, limit=20))
+    out = extract_documents(spans, mode="span")
+    assert _plan_ran(out) == "span"
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("collect_list") >= 2, plan  # partial + merge phases
 
 
-def test_span_mode_slim_explode_plan(spark, tmp_path):
+def test_span_mode_slim_explode_plan(spark, tmp_path, span_plan_has_no_fixed_cost):
     """mode='span' must keep the heavy document arrays OUT of the
     exploded/aggregated side: the explode subtree carries only slim
     per-span fields and the pass-through columns (spans, expected,
@@ -120,9 +149,10 @@ def test_span_mode_slim_explode_plan(spark, tmp_path):
     Plan-pinned: exactly two pruned scans (the exploded side reads ONLY
     doc_id+spans), one join, and zero first() aggregates."""
     src = str(tmp_path / "spans_src")
-    build_spans_table(spark, SF_SMALL, limit=40).write.parquet(src)
+    _with_outlier(spark, build_spans_table(spark, SF_SMALL, limit=40)).write.parquet(src)
     df = spark.read.parquet(src)
     out = extract_documents(df, mode="span")
+    assert _plan_ran(out) == "span"
     import re
 
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -367,20 +397,26 @@ def test_multi_gt_envelope_branches(spark, tmp_path):
 
 
 def test_poison_doc_quarantined_not_fatal(spark):
-    """S11 inside the fused UDF: a pathological document (recursion-bomb
-    HTML) must not fail the job — it lands in the quarantine frame with
-    an error string while every healthy doc still evaluates clean."""
+    """S11 inside the fused UDF and the doc plan: a pathological document
+    (recursion-bomb HTML) must not fail the job — it lands in the
+    quarantine frame with an error string while every healthy doc still
+    evaluates clean. Span mode takes the doc plan on this balanced input,
+    so it quarantines too."""
     from donut_spark.operators.extract import extract_and_evaluate
     from donut_spark.plans.lineage import quarantine_split
 
-    good, bad = quarantine_split(extract_and_evaluate(_docs_with_poison(spark, 6)))
-    bad_rows = bad.select("doc_id", "_error").collect()
-    assert [r.doc_id for r in bad_rows] == ["poison"]
-    assert "RecursionError" in bad_rows[0]._error
-    g = good.agg(
-        F.count("*").alias("n"), F.avg("exact_match").alias("em")
-    ).first()
-    assert g.n == 6 and g.em == 1.0
+    docs = _docs_with_poison(spark, 6)
+    span = extract_documents(docs, mode="span")
+    assert _plan_ran(span) == "doc"
+    for evaluated in (extract_and_evaluate(docs), evaluate_extraction(span)):
+        good, bad = quarantine_split(evaluated)
+        bad_rows = bad.select("doc_id", "_error").collect()
+        assert [r.doc_id for r in bad_rows] == ["poison"]
+        assert "RecursionError" in bad_rows[0]._error
+        g = good.agg(
+            F.count("*").alias("n"), F.avg("exact_match").alias("em")
+        ).first()
+        assert g.n == 6 and g.em == 1.0
 
 
 def test_streaming_extraction(spark, tmp_path):
@@ -770,7 +806,7 @@ def test_sessionize_late_event_never_moves_end_backward(spark, tmp_path):
     assert s.n_events == 4
 
 
-def test_doc_and_span_modes_agree_on_nulls_and_ties(spark):
+def test_doc_and_span_modes_agree_on_nulls_and_ties(spark, span_plan_has_no_fixed_cost):
     """The two physical strategies must produce identical extracted
     sequences on NULL media_ref / NULL offset / duplicate offsets (doc
     mode coerces via span.get(...) or defaults + Python stable sort;
@@ -793,9 +829,89 @@ def test_doc_and_span_modes_agree_on_nulls_and_ties(spark):
         )
     ]
     df = spark.createDataFrame(rows, schema)
-    doc = extract_documents(df, mode="doc").select("doc_id", F.to_json("extracted").alias("j")).first()
-    span = extract_documents(df, mode="span").select("doc_id", F.to_json("extracted").alias("j")).first()
-    assert doc.j == span.j
+    doc = extract_documents(df, mode="doc")
+    span = extract_documents(df, mode="span")
+    # one document is all of the input: with no fixed cost the span plan pays
+    assert (_plan_ran(doc), _plan_ran(span)) == ("doc", "span")
+    j = F.to_json("extracted").alias("j")
+    assert doc.select(j).first().j == span.select(j).first().j
+
+
+def test_span_mode_routes_by_document_weight(spark, monkeypatch):
+    """mode='span' probes max/sum of size(spans) once. A balanced input,
+    and a test-sized outlier that cannot pay the span plan's fixed cost,
+    get the doc plan (one Arrow node, no Exchange); the same outlier with
+    that cost set aside gets the salted two-phase span plan. Both give
+    the reference extraction and one output schema."""
+    from donut_spark.operators import extract
+    from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA
+
+    rows = [
+        (f"b_{i}", *synth_doc(f"b_{i}", "alpha beta gamma delta", n_text=3, n_media=1))
+        for i in range(40)
+    ]
+    balanced = spark.createDataFrame(rows, SPANS_TABLE_SCHEMA)
+    light = extract_documents(balanced, mode="span")
+    outlier = _with_outlier(spark, balanced)
+    assert _plan_ran(extract_documents(outlier, mode="span")) == "doc"
+    monkeypatch.setattr(extract, "_SPAN_PLAN_FIXED_SPANS", 0)
+    heavy = extract_documents(outlier, mode="span")
+
+    executed = light._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in executed, executed
+    assert executed.count("ArrowEvalPython") == 1, executed
+    assert _plan_ran(heavy) == "span"
+    assert heavy._jdf.queryExecution().optimizedPlan().toString().count("collect_list") >= 2
+
+    assert light.schema == heavy.schema
+    for out, n in ((light, 40), (heavy, 41)):
+        assert out.count() == n
+        assert out.filter(F.col("extracted") != F.col("expected")).count() == 0
+    shared = light.select("doc_id", "extracted").exceptAll(
+        heavy.select("doc_id", "extracted")
+    )
+    assert shared.count() == 0
+
+
+@pytest.mark.parametrize(
+    "heaviest,total,slots,faster",
+    [
+        # one job (extract + evaluate + plain sink) per plan on a 4-vCPU
+        # host, medians of 3-5 alternating runs, doc plan vs span plan
+        (10_000, 53_680, 4, "doc"),    # perfbench skew_span input: 2.36 vs 3.41 s
+        (10_000, 53_044, 6, "doc"),    # same shape: 2.52 vs 3.97 s
+        (10_000, 53_044, 8, "doc"),    # 2.91 vs 4.32 s
+        (10_000, 99_099, 8, "doc"),    # 4x10k-span skew fixture: 2.77 vs 4.11 s
+        (20_000, 22_811, 4, "doc"),    # 2.04 vs 3.45 s
+        (39_467, 63_745, 4, "doc"),    # 2.71 vs 3.81 s
+        (71_040, 95_318, 4, "doc"),    # 3.28 vs 4.10 s
+        (100_000, 122_406, 4, "doc"),  # 4.45 vs 5.31 s
+        (150_000, 173_518, 2, "doc"),  # 7.16 vs 10.91 s
+        (150_000, 173_483, 3, "doc"),  # 6.56 vs 8.11 s
+        (150_000, 173_038, 4, "span"), # 6.31 vs 5.47 s
+        (200_000, 222_406, 4, "span"), # 8.61 vs 8.27 s
+        (300_000, 323_483, 3, "span"), # 13.29 vs 11.54 s
+        (300_000, 323_038, 4, "span"), # 11.15 vs 10.13 s
+    ],
+)
+def test_span_plan_routing_follows_measured_crossover(heaviest, total, slots, faster):
+    """The routing rule sends each measured input to the plan that ran it
+    faster."""
+    from donut_spark.operators.extract import _span_plan_pays
+
+    assert ("span" if _span_plan_pays(heaviest, total, slots) else "doc") == faster
+
+
+def test_span_mode_rejects_streaming_input(spark, tmp_path):
+    """The routing probe is an action, which a streaming source cannot
+    run: mode='span' must refuse a streaming frame up front."""
+    from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA
+
+    src = str(tmp_path / "stream_src")
+    build_spans_table(spark, SF_SMALL, limit=5).write.parquet(src)
+    stream = spark.readStream.schema(SPANS_TABLE_SCHEMA).parquet(src)
+    with pytest.raises(ValueError, match="streaming"):
+        extract_documents(stream, mode="span")
 
 
 def test_multimodal_resize_and_frame_sample(spark):
