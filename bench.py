@@ -153,35 +153,27 @@ def main() -> None:
         results[f"{name}_probe_only"] = round(time.perf_counter() - t0, 3)
 
     # adversarial skew (SURVEY §4.1 motivating case): the sf battery
-    # input plus 4 docs of 10k spans each. Doc-mode (the fused flagship
-    # plan) pins each heavy doc to ONE Python worker for the whole doc;
-    # span-mode explodes, salts the heavy tail over 16 salt values and
-    # reassembles — the 10^12-doc plan. Timed on the same staged input;
-    # exact_match_rate must be 1.0 in BOTH modes (recorded alongside).
-    # Excluded from `total` to keep the battery comparable across rounds.
-    from donut_spark.operators.extract import evaluate_extraction, extract_documents
+    # input plus 4 docs of 10k spans each. The fused flagship plan pins
+    # each heavy doc to ONE Python worker for the whole doc. Timed on the
+    # staged input; exact_match_rate must be 1.0 (recorded alongside).
+    # The row keeps its `skew_doc_mode` name from when a span-parallel
+    # plan was timed beside it. Excluded from `total` to keep the
+    # battery comparable across rounds.
     from donut_spark.sources.fixtures import materialize_skewed_spans
 
     skew = spark.read.parquet(materialize_skewed_spans(spark, sf_dir))
     skew.count()  # materialize + warm footers
-    skew_match: dict[str, float] = {}
-    for mode in ("doc", "span"):
-        plan = (
-            (lambda df: extract_and_evaluate(df))
-            if mode == "doc"
-            else (lambda df: evaluate_extraction(extract_documents(df, "span")))
+    best = float("inf")
+    for _ in range(2):
+        t0 = time.perf_counter()
+        skew_agg = (
+            extract_and_evaluate(skew)
+            .agg(F.count("*").alias("docs"), F.avg("exact_match").alias("em"))
+            .collect()[0]
         )
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            skew_agg = (
-                plan(skew)
-                .agg(F.count("*").alias("docs"), F.avg("exact_match").alias("em"))
-                .collect()[0]
-            )
-            best = min(best, time.perf_counter() - t0)
-        results[f"skew_{mode}_mode"] = round(best, 3)
-        skew_match[mode] = float(skew_agg["em"])
+        best = min(best, time.perf_counter() - t0)
+    results["skew_doc_mode"] = round(best, 3)
+    skew_match = {"doc": float(skew_agg["em"])}
 
     # PDF modality throughput (round-5): parse REAL staged PDF bytes for
     # every battery document back into extracted span arrays

@@ -79,27 +79,17 @@ def main() -> None:
 
         print(leg, round(timeit(run), 3))
     elif leg == "skew":
-        from donut_spark.operators.extract import (
-            evaluate_extraction,
-            extract_and_evaluate,
-            extract_documents,
-        )
+        from donut_spark.operators.extract import extract_and_evaluate
         from donut_spark.sources.fixtures import materialize_skewed_spans
 
         skew = spark.read.parquet(materialize_skewed_spans(spark, sf))
         skew.count()
-        for mode in ("doc", "span"):
-            plan = (
-                (lambda df: extract_and_evaluate(df))
-                if mode == "doc"
-                else (lambda df: evaluate_extraction(extract_documents(df, "span")))
-            )
-            t = timeit(
-                lambda: plan(skew)
-                .agg(F.count("*"), F.avg("exact_match"))
-                .collect()
-            )
-            print(f"skew_{mode}_mode", round(t, 3))
+        t = timeit(
+            lambda: extract_and_evaluate(skew)
+            .agg(F.count("*"), F.avg("exact_match"))
+            .collect()
+        )
+        print("skew_doc_mode", round(t, 3))
     elif leg == "streaming":
         from bench_streaming import run as streaming_run
 

@@ -116,7 +116,7 @@ def worker(cpus: int, spans_path: str) -> None:
     spans.count()  # warm metadata/footers
 
     def job():
-        out = extract_and_evaluate(spans, decluster_input=False)
+        out = extract_and_evaluate(spans)
         return out.agg(
             F.count("*").alias("docs"),
             F.avg("exact_match").alias("em"),

@@ -14,7 +14,7 @@ Layout:
     functions/  pandas-UDF + higher-order-function wrappers
     sources/    table catalog (parquet/Iceberg-shaped) + fixture synth
     operators/  pipelines: extraction, dedup, similarity, multimodal
-    plans/      explicit physical-plan helpers (skew salting, lineage)
+    plans/      explicit physical-plan helpers (skew decluster, lineage)
     streaming/  Structured Streaming variant of the extraction pipeline
 """
 

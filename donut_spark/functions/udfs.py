@@ -35,7 +35,6 @@ from pyspark.sql.types import (
 from ..core import htmlnorm, metrics, textstats, tree
 
 __all__ = [
-    "extract_spans_json",
     "main_content_udf",
     "clean_table",
     "repair_table",
@@ -90,18 +89,6 @@ def _extract_one(doc: list) -> List[dict]:
     return pieces
 
 
-@F.pandas_udf(StringType())
-def _extract_spans_json(spans_json: pd.Series) -> pd.Series:
-    """JSON[spans] → JSON[cleaned spans] (doc-parallel extraction body)."""
-    loads, dumps = json.loads, json.dumps
-    return pd.Series(
-        [
-            dumps(_extract_one(loads(doc_json) if doc_json else []), ensure_ascii=False)
-            for doc_json in spans_json
-        ]
-    )
-
-
 EXTRACT_ERR_SCHEMA = StructType(
     [
         StructField("extracted_json", StringType()),
@@ -115,8 +102,8 @@ def _extract_spans_err(spans_json: pd.Series) -> pd.DataFrame:
     """Extraction body with the S11 error channel: a poison document
     yields ([], error string) instead of failing the task — the
     gt-free twin of ``_extract_eval_fused``'s quarantine path, used by
-    ``extract_documents(mode='doc')`` and therefore the streaming twin
-    (a streaming query MUST never die on one bad record)."""
+    ``extract_documents`` and therefore the streaming twin (a streaming
+    query MUST never die on one bad record)."""
     loads, dumps = json.loads, json.dumps
     rows = []
     for doc_json in spans_json:
@@ -230,49 +217,6 @@ def _extract_eval_fused(spans_json: pd.Series, gt_parse: pd.Series) -> pd.DataFr
     return pd.DataFrame(rows, columns=_EVAL_COLS)
 
 
-def extract_spans_json(spans_col) -> "F.Column":
-    """Column form of the doc-parallel extraction body: cleaned spans in
-    reading order as the kernel's own ``json.dumps`` serialization —
-    byte-comparable against a fixture ``expected_json`` produced by the
-    same serializer."""
-    return _extract_spans_json(F.to_json(spans_col))
-
-
-PIECE_SCHEMA = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-    ]
-)
-
-
-@F.pandas_udf(StringType())
-def _extract_pieces_json(html: pd.Series) -> pd.Series:
-    dumps = json.dumps
-    return html.map(
-        lambda h: dumps(
-            [
-                {"kind": k, "text": t, "media_ref": r}
-                for k, t, r in htmlnorm.html_to_spans(h or "")
-            ],
-            ensure_ascii=False,
-        )
-    )
-
-
-def extract_pieces(html_col) -> "F.Column":
-    """One text span's HTML → ordered clean pieces (no offsets yet).
-
-    The span-parallel path: spans are exploded, each extracted
-    independently, then reassembled relationally
-    (`operators/extract.py` mode="span"). Balances UDF compute across
-    partitions for the media-heavy document tail. JSON-string transport
-    for the reason given above :func:`_extract_one`.
-    """
-    return F.from_json(_extract_pieces_json(html_col), ArrayType(PIECE_SCHEMA))
-
-
 @F.pandas_udf(StringType())
 def main_content_udf(html: pd.Series) -> pd.Series:
     """Full crawled page → main-content text: readability-style block
@@ -311,13 +255,13 @@ def _tree_eval_fused(gt_parse: pd.Series) -> pd.DataFrame:
     """The gt_parse-only half of :func:`_extract_eval_fused` as ONE
     Python node: json2token → token2json → roundtrip → nTED.
 
-    Exists for ``evaluate_extraction`` over pre-extracted frames (the
-    span-parallel path): chaining the four single-purpose UDFs builds
+    Exists for ``evaluate_extraction`` over frames already extracted by
+    ``extract_documents``: chaining the four single-purpose UDFs builds
     four ArrowEvalPython nodes, and EACH one's row queue re-buffers the
-    child rows — which there carry the reassembled ``extracted``/
-    ``expected``/``spans`` arrays, multi-MB per media-heavy document.
-    Measured on the 4×40k-span skew fixture the chain costs ~20 s
-    against ~1 s fused. Per-element semantics are identical to the
+    child rows — which there carry the ``extracted``/``expected``/
+    ``spans`` arrays, multi-MB per media-heavy document. Measured on
+    the 4×40k-span skew fixture the chain costs ~20 s against ~1 s
+    fused. Per-element semantics are identical to the
     chained kernels (same ``tree`` calls, same ``_parse_or_empty``
     null/garbage coercion for nTED)."""
     rows = []

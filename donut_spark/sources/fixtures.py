@@ -19,8 +19,8 @@ Key properties:
 * offsets are a seeded permutation — stored span order is shuffled, so
   reading-order recovery (`array_sort` on offset) is really exercised
   (mirrors the layout-order label join `synthdog/template.py:66-68`);
-* ~10% of docs are media-heavy (>= 48 spans) — the skew tail that the
-  salting plan (SURVEY.md §4.1) must absorb;
+* ~10% of docs are media-heavy (>= 48 spans) — the skew tail of
+  SURVEY.md §4.1;
 * all randomness is `random.Random(crc32(doc_id))` — byte-identical
   output at any parallelism level or cluster size.
 """
@@ -357,10 +357,9 @@ def build_skewed_spans_table(
     interleaved spans each — the media-heavy tail where one document is
     ~10³× the median's UDF cost, which AQE cannot see (it balances
     bytes, not Python time) and which pins doc-parallel extraction to
-    ``heavy_docs`` cores while span-parallel extraction spreads it over
-    the cluster. Heavy docs come from the same ``synth_doc`` algebra
-    (forced span counts), so ``expected``/``gt_parse`` invariants hold
-    and exact_match_rate must stay 1.0 in BOTH physical modes."""
+    ``heavy_docs`` cores. Heavy docs come from the same ``synth_doc``
+    algebra (forced span counts), so ``expected``/``gt_parse`` invariants
+    hold and exact_match_rate must stay 1.0."""
     base = build_spans_table(spark, sf_dir)
     seeds = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -401,8 +400,8 @@ def materialize_skewed_spans(
     """Write the skewed spans fixture once (idempotent, 32-file layout —
     same sizing rule as :func:`materialize_spans`); the hash layout puts
     each heavy doc in its own file alongside light docs, which is
-    exactly the adversarial scan shape: doc-mode inherits it and pins,
-    span-mode re-shards."""
+    exactly the adversarial scan shape: the extraction plan inherits it
+    and pins each heavy doc to one Python worker."""
     import os
 
     name = os.path.basename(sf_dir.rstrip("/"))

@@ -65,7 +65,7 @@ def stream_extract_from_files(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-    return extract_documents(source, mode="doc")
+    return extract_documents(source)
 
 
 def stream_pdf_extract_from_files(

@@ -6,22 +6,18 @@
         submit/run_extract.py \\
         --input  <spans table path>  \\
         --output <output root>       \\
-        [--resume --n-buckets 4096] [--mode doc|span]
-        [--modality spans|pdf]
+        [--resume --n-buckets 4096] [--modality spans|pdf]
 
 Input (``--modality spans``, default): a table of interleaved documents
 ``(doc_id string, spans array<struct<kind,text,media_ref,offset:int>>
 [, expected, gt_parse])`` — parquet or (when the session has an Iceberg
 catalog configured) an Iceberg table name.
 
-``--mode doc`` (default) runs the doc-parallel kernel: one Python row
-per document, no shuffle. ``--mode span`` is weight-routed: one
-aggregate over the input picks the plan, and the span-parallel
-explode/shuffle plan runs only when one document is heavy enough that
-spreading it beats pinning it to one worker (in practice well over
-100 000 spans at 4 task slots); otherwise the doc plan runs. Both give
-the same rows for healthy documents, but only the doc plan quarantines
-a poison document: on the span plan it fails the job.
+Extraction is one Python row per document with no shuffle. An input
+with ``gt_parse`` is also evaluated: ``roundtrip_ok`` and ``nted`` in
+the same Python node, plus ``exact_match`` when it has ``expected``. An
+input without ``gt_parse`` is extracted only. A poison document is
+quarantined, never fatal.
 
 Input (``--modality pdf``): a table of native documents ``(doc_id
 string, content binary)`` holding real PDF bytes; the layout parser
@@ -56,13 +52,6 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument(
-        "--mode", choices=("doc", "span"), default="doc",
-        help="doc: one Python row per document, no shuffle; span: "
-             "weight-routed — the span-parallel explode/shuffle plan only "
-             "when one document is heavy enough that spreading it beats "
-             "pinning it to one worker, else the doc plan",
-    )
-    ap.add_argument(
         "--modality", choices=("spans", "pdf"), default="spans",
         help="input shape: interleaved span tables (default) or native "
              "PDF bytes parsed by the layout codec",
@@ -95,9 +84,9 @@ def main() -> None:
             )
 
             return pdf_documents_from_table(df)
-        if args.mode == "doc" and "gt_parse" in df.columns:
+        if "gt_parse" in df.columns:
             return extract_and_evaluate(df)
-        return extract_documents(df, mode=args.mode)
+        return extract_documents(df)
 
     if args.resume:
         from donut_spark.operators.checkpoint import run_resumable

@@ -1,4 +1,4 @@
-"""End-to-end pipeline tests: fixture synthesis, both extraction modes,
+"""End-to-end pipeline tests: fixture synthesis, the extraction plan,
 invariants, lineage, checkpoint resume, streaming, multimodal."""
 
 import os
@@ -48,31 +48,14 @@ def _docs_with_poison(spark, n):
 
 def _with_outlier(spark, df):
     """``df`` plus one SynthDoG-style document holding twice as many spans
-    as all of ``df`` together. Test-sized, so ``extract_documents(
-    mode="span")`` routes it to the span plan only under
-    ``span_plan_has_no_fixed_cost``."""
+    as all of ``df`` together: a skewed input, where one document is most
+    of the work."""
     from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA
 
     n = df.agg(F.sum(F.size("spans"))).first()[0]
     spans, expected, gt = synth_doc("outlier", "alpha beta gamma delta", n_text=n, n_media=n)
     heavy = spark.createDataFrame([("outlier", spans, expected, gt)], SPANS_TABLE_SCHEMA)
     return df.unionByName(heavy)
-
-
-@pytest.fixture
-def span_plan_has_no_fixed_cost(monkeypatch):
-    """Zero the span plan's fixed cost in the routing rule, so a
-    test-sized outlier document (``_with_outlier``) takes the span plan
-    on the suite's 8 task slots."""
-    from donut_spark.operators import extract
-
-    monkeypatch.setattr(extract, "_SPAN_PLAN_FIXED_SPANS", 0)
-
-
-def _plan_ran(df):
-    """Which extraction plan ``df`` carries: the salted span plan or the
-    one-Arrow-node doc plan."""
-    return "span" if "_salt" in df._jdf.queryExecution().optimizedPlan().toString() else "doc"
 
 
 def test_synth_doc_deterministic():
@@ -98,7 +81,7 @@ def test_spans_table_schema(spark):
 
 
 def test_flagship_invariants_doc_mode(spark):
-    df = run_flagship(spark, SF_SMALL, mode="doc", limit=120)
+    df = run_flagship(spark, SF_SMALL, limit=120)
     agg = df.agg(
         F.avg("exact_match").alias("em"),
         F.avg("roundtrip_ok").alias("rt"),
@@ -111,67 +94,17 @@ def test_flagship_invariants_doc_mode(spark):
     assert agg.nted == 1.0
 
 
-def test_span_mode_matches_doc_mode(spark, span_plan_has_no_fixed_cost):
+def test_span_mode_matches_doc_mode(spark):
+    """``mode`` is inert: ``"doc"`` and ``"span"`` build the same plan,
+    and any other value is refused."""
     spans = _with_outlier(spark, build_spans_table(spark, SF_SMALL, limit=80))
     doc = extract_documents(spans, mode="doc")
     span = extract_documents(spans, mode="span")
-    assert (_plan_ran(doc), _plan_ran(span)) == ("doc", "span")
-    joined = doc.select("doc_id", "extracted").alias("d").join(
-        span.select("doc_id", "extracted").alias("s"), "doc_id"
-    )
-    assert joined.count() == 81
-    n_diff = joined.filter(F.col("d.extracted") != F.col("s.extracted")).count()
-    assert n_diff == 0
-
-
-def test_span_mode_salted_two_phase_plan(spark, span_plan_has_no_fixed_cost):
-    """The span-mode reassembly must be the TWO-PHASE salted agg
-    (plans/skew.salt_heavy): a partial collect per (doc_id, _salt)
-    below the final per-doc merge, so one 10k-span document fans its
-    collect work over 16 reducers instead of pinning one. Plan-pinned:
-    a _salt grouping key and two collect aggregates."""
-    spans = _with_outlier(spark, build_spans_table(spark, SF_SMALL, limit=20))
-    out = extract_documents(spans, mode="span")
-    assert _plan_ran(out) == "span"
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("collect_list") >= 2, plan  # partial + merge phases
-
-
-def test_span_mode_slim_explode_plan(spark, tmp_path, span_plan_has_no_fixed_cost):
-    """mode='span' must keep the heavy document arrays OUT of the
-    exploded/aggregated side: the explode subtree carries only slim
-    per-span fields and the pass-through columns (spans, expected,
-    gt_parse) re-attach through ONE doc_id join, moving exactly once as
-    raw row bytes. The earlier single-scan design rode them through the
-    two collect aggregates via first(ignorenulls) — measured superlinear
-    on 10k-span docs (each agg boundary re-copies the arrays
-    element-by-element through object agg buffers; 46 s vs ~1 s slim).
-    Plan-pinned: exactly two pruned scans (the exploded side reads ONLY
-    doc_id+spans), one join, and zero first() aggregates."""
-    src = str(tmp_path / "spans_src")
-    _with_outlier(spark, build_spans_table(spark, SF_SMALL, limit=40)).write.parquet(src)
-    df = spark.read.parquet(src)
-    out = extract_documents(df, mode="span")
-    assert _plan_ran(out) == "span"
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    scans = re.findall(r"ReadSchema: (\S+)", plan)
-    assert len(scans) == 2, f"expected two scans, plan:\n{plan[:2000]}"
-    # column pruning: the exploded side must read EXACTLY doc_id+spans
-    # (ReadSchema strings are truncated with "..." past ~100 chars, so
-    # match the slim schema exactly rather than substring-testing the
-    # fat one)
-    slim_schema = (
-        "struct<doc_id:string,spans:array<struct<kind:string,"
-        "text:string,media_ref:string,offset:int>>>"
-    )
-    assert scans.count(slim_schema) == 1, f"exploded scan not pruned: {scans}"
-    assert "Join" in plan
-    assert "first(" not in plan, "gt arrays riding the agg buffers again"
-    # and the carried columns survive intact
-    row = out.filter(F.size("expected") > 0).first()
-    assert row.gt_parse and row.expected is not None and row.spans is not None
+    plan = doc._jdf.queryExecution().optimizedPlan()
+    assert plan.sameResult(span._jdf.queryExecution().optimizedPlan())
+    assert doc.schema == span.schema
+    with pytest.raises(ValueError, match="unknown mode"):
+        extract_documents(spans, mode="salted")
 
 
 def test_flagship_plan_exchange_free(spark):
@@ -200,7 +133,7 @@ def test_media_heavy_tail_exists(spark):
 def test_lineage_metrics(spark):
     from donut_spark.plans.lineage import lineage_metrics
 
-    df = run_flagship(spark, SF_SMALL, mode="doc", limit=50)
+    df = run_flagship(spark, SF_SMALL, limit=50)
     lm = lineage_metrics(df).collect()
     assert sum(r.n_docs for r in lm) == 50
     assert all(r.checksum is not None for r in lm)
@@ -287,51 +220,6 @@ def test_checkpoint_resume_routes_quarantine(spark, tmp_path):
     assert lineage.agg(F.sum("n_docs")).first()[0] == n_total - n_bad
 
 
-def test_salted_two_phase_agg(spark):
-    """plans/skew.salt_heavy: two-phase aggregation over a hot key gives
-    the same answer as the direct plan (correctness of the salting
-    rewrite; the win is partition balance at scale)."""
-    from donut_spark.plans.skew import salt_heavy
-
-    spans = build_spans_table(spark, SF_SMALL, limit=150)
-    exploded = spans.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.offset").alias("offset"),
-        F.length("s.text").alias("chars"),
-    )
-    direct = {
-        r.kind: (r.n, r.total)
-        for r in exploded.groupBy("kind")
-        .agg(F.count("*").alias("n"), F.sum("chars").alias("total"))
-        .collect()
-    }
-    salted = salt_heavy(
-        exploded, key="kind", row_col="offset", weight=F.lit(10**9), salt_buckets=8
-    )
-    partial = salted.groupBy("kind", "_salt").agg(
-        F.count("*").alias("pn"), F.sum("chars").alias("pt")
-    )
-    merged = {
-        r.kind: (r.n, r.total)
-        for r in partial.groupBy("kind")
-        .agg(F.sum("pn").alias("n"), F.sum("pt").alias("total"))
-        .collect()
-    }
-    assert merged == direct
-    # salts actually spread the hot key
-    n_salts = salted.filter(F.col("kind") == "text").select("_salt").distinct().count()
-    assert n_salts > 1
-
-
-def test_decluster_partition_count(spark):
-    from donut_spark.plans.skew import decluster
-
-    df = spark.range(1000).selectExpr("cast(id as string) doc_id")
-    out = decluster(df, num_partitions=12)
-    assert out.rdd.getNumPartitions() == 12
-
-
 def test_quarantine_split(spark):
     from donut_spark.plans.lineage import quarantine_split
 
@@ -397,18 +285,19 @@ def test_multi_gt_envelope_branches(spark, tmp_path):
 
 
 def test_poison_doc_quarantined_not_fatal(spark):
-    """S11 inside the fused UDF and the doc plan: a pathological document
-    (recursion-bomb HTML) must not fail the job — it lands in the
-    quarantine frame with an error string while every healthy doc still
-    evaluates clean. Span mode takes the doc plan on this balanced input,
-    so it quarantines too."""
+    """S11 inside the fused UDF and in ``extract_documents``: a
+    pathological document (recursion-bomb HTML) must not fail the job —
+    it lands in the quarantine frame with an error string while every
+    healthy doc, the skewed input's outlier included, still evaluates
+    clean."""
     from donut_spark.operators.extract import extract_and_evaluate
     from donut_spark.plans.lineage import quarantine_split
 
-    docs = _docs_with_poison(spark, 6)
-    span = extract_documents(docs, mode="span")
-    assert _plan_ran(span) == "doc"
-    for evaluated in (extract_and_evaluate(docs), evaluate_extraction(span)):
+    docs = _with_outlier(spark, _docs_with_poison(spark, 6))
+    for evaluated in (
+        extract_and_evaluate(docs),
+        evaluate_extraction(extract_documents(docs)),
+    ):
         good, bad = quarantine_split(evaluated)
         bad_rows = bad.select("doc_id", "_error").collect()
         assert [r.doc_id for r in bad_rows] == ["poison"]
@@ -416,7 +305,7 @@ def test_poison_doc_quarantined_not_fatal(spark):
         g = good.agg(
             F.count("*").alias("n"), F.avg("exact_match").alias("em")
         ).first()
-        assert g.n == 6 and g.em == 1.0
+        assert g.n == 7 and g.em == 1.0
 
 
 def test_streaming_extraction(spark, tmp_path):
@@ -806,13 +695,10 @@ def test_sessionize_late_event_never_moves_end_backward(spark, tmp_path):
     assert s.n_events == 4
 
 
-def test_doc_and_span_modes_agree_on_nulls_and_ties(spark, span_plan_has_no_fixed_cost):
-    """The two physical strategies must produce identical extracted
-    sequences on NULL media_ref / NULL offset / duplicate offsets (doc
-    mode coerces via span.get(...) or defaults + Python stable sort;
-    span mode must coalesce and tie-break on input position)."""
-    from donut_spark.operators.extract import extract_documents
-
+def test_doc_and_span_modes_agree_on_nulls_and_ties(spark):
+    """NULL media_ref / NULL offset / duplicate offsets: the kernel reads
+    a NULL offset as 0 and a NULL media_ref as '', and Python's stable
+    sort keeps input order on equal offsets."""
     schema = (
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>"
@@ -828,22 +714,20 @@ def test_doc_and_span_modes_agree_on_nulls_and_ties(spark, span_plan_has_no_fixe
             ],
         )
     ]
-    df = spark.createDataFrame(rows, schema)
-    doc = extract_documents(df, mode="doc")
-    span = extract_documents(df, mode="span")
-    # one document is all of the input: with no fixed cost the span plan pays
-    assert (_plan_ran(doc), _plan_ran(span)) == ("doc", "span")
-    j = F.to_json("extracted").alias("j")
-    assert doc.select(j).first().j == span.select(j).first().j
+    out = extract_documents(spark.createDataFrame(rows, schema))
+    assert out.select(F.to_json("extracted").alias("j")).first().j == (
+        '[{"kind":"media","text":"","media_ref":"","offset":0},'
+        '{"kind":"media","text":"","media_ref":"img_7","offset":1},'
+        '{"kind":"text","text":"beta","media_ref":"","offset":2},'
+        '{"kind":"text","text":"alpha","media_ref":"","offset":3}]'
+    )
 
 
-def test_span_mode_routes_by_document_weight(spark, monkeypatch):
-    """mode='span' probes max/sum of size(spans) once. A balanced input,
-    and a test-sized outlier that cannot pay the span plan's fixed cost,
-    get the doc plan (one Arrow node, no Exchange); the same outlier with
-    that cost set aside gets the salted two-phase span plan. Both give
-    the reference extraction and one output schema."""
-    from donut_spark.operators import extract
+def test_span_mode_routes_by_document_weight(spark, tmp_path):
+    """Document weight does not change the plan: a balanced input and the
+    same input plus an outlier document (staged as one parquet table)
+    both get one Arrow node and no Exchange, building that plan runs no
+    Spark job, and every row gives the reference extraction."""
     from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA
 
     rows = [
@@ -851,67 +735,26 @@ def test_span_mode_routes_by_document_weight(spark, monkeypatch):
         for i in range(40)
     ]
     balanced = spark.createDataFrame(rows, SPANS_TABLE_SCHEMA)
-    light = extract_documents(balanced, mode="span")
-    outlier = _with_outlier(spark, balanced)
-    assert _plan_ran(extract_documents(outlier, mode="span")) == "doc"
-    monkeypatch.setattr(extract, "_SPAN_PLAN_FIXED_SPANS", 0)
-    heavy = extract_documents(outlier, mode="span")
+    src = str(tmp_path / "skewed")
+    _with_outlier(spark, balanced).write.parquet(src)
+    skewed = spark.read.parquet(src)
 
-    executed = light._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in executed, executed
-    assert executed.count("ArrowEvalPython") == 1, executed
-    assert _plan_ran(heavy) == "span"
-    assert heavy._jdf.queryExecution().optimizedPlan().toString().count("collect_list") >= 2
+    sc = spark.sparkContext
+    group = "extract_documents_plan_build"
+    sc.setJobGroup(group, "building the extraction plan")
+    try:
+        outs = [extract_documents(df, mode="span") for df in (balanced, skewed)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
-    assert light.schema == heavy.schema
-    for out, n in ((light, 40), (heavy, 41)):
-        assert out.count() == n
-        assert out.filter(F.col("extracted") != F.col("expected")).count() == 0
-    shared = light.select("doc_id", "extracted").exceptAll(
-        heavy.select("doc_id", "extracted")
-    )
-    assert shared.count() == 0
-
-
-@pytest.mark.parametrize(
-    "heaviest,total,slots,faster",
-    [
-        # one job (extract + evaluate + plain sink) per plan on a 4-vCPU
-        # host, medians of 3-5 alternating runs, doc plan vs span plan
-        (10_000, 53_680, 4, "doc"),    # perfbench skew_span input: 2.36 vs 3.41 s
-        (10_000, 53_044, 6, "doc"),    # same shape: 2.52 vs 3.97 s
-        (10_000, 53_044, 8, "doc"),    # 2.91 vs 4.32 s
-        (10_000, 99_099, 8, "doc"),    # 4x10k-span skew fixture: 2.77 vs 4.11 s
-        (20_000, 22_811, 4, "doc"),    # 2.04 vs 3.45 s
-        (39_467, 63_745, 4, "doc"),    # 2.71 vs 3.81 s
-        (71_040, 95_318, 4, "doc"),    # 3.28 vs 4.10 s
-        (100_000, 122_406, 4, "doc"),  # 4.45 vs 5.31 s
-        (150_000, 173_518, 2, "doc"),  # 7.16 vs 10.91 s
-        (150_000, 173_483, 3, "doc"),  # 6.56 vs 8.11 s
-        (150_000, 173_038, 4, "span"), # 6.31 vs 5.47 s
-        (200_000, 222_406, 4, "span"), # 8.61 vs 8.27 s
-        (300_000, 323_483, 3, "span"), # 13.29 vs 11.54 s
-        (300_000, 323_038, 4, "span"), # 11.15 vs 10.13 s
-    ],
-)
-def test_span_plan_routing_follows_measured_crossover(heaviest, total, slots, faster):
-    """The routing rule sends each measured input to the plan that ran it
-    faster."""
-    from donut_spark.operators.extract import _span_plan_pays
-
-    assert ("span" if _span_plan_pays(heaviest, total, slots) else "doc") == faster
-
-
-def test_span_mode_rejects_streaming_input(spark, tmp_path):
-    """The routing probe is an action, which a streaming source cannot
-    run: mode='span' must refuse a streaming frame up front."""
-    from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA
-
-    src = str(tmp_path / "stream_src")
-    build_spans_table(spark, SF_SMALL, limit=5).write.parquet(src)
-    stream = spark.readStream.schema(SPANS_TABLE_SCHEMA).parquet(src)
-    with pytest.raises(ValueError, match="streaming"):
-        extract_documents(stream, mode="span")
+    for out in outs:
+        executed = out._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in executed, executed
+        assert executed.count("ArrowEvalPython") == 1, executed
+    heavy = outs[1]
+    assert heavy.count() == 41
+    assert heavy.filter(F.col("extracted") != F.col("expected")).count() == 0
 
 
 def test_multimodal_resize_and_frame_sample(spark):

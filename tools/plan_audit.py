@@ -46,34 +46,6 @@ def main() -> None:
         )
     )
 
-    from donut_spark.operators.extract import extract_documents
-
-    span = extract_documents(load_spans(spark, SF), mode="span")
-    sections.append(
-        (
-            "span-mode extract_documents (skew path)",
-            "Weight-routed: unless one document is heavy enough for the "
-            "span plan to pay (operators/extract._span_plan_pays), this "
-            "is the doc plan (one ArrowEvalPython, no Exchange). Otherwise it "
-            "MUST show: the exploded side reads ONLY doc_id+spans "
-            "(slim ReadSchema; the pass-through arrays re-attach via ONE "
-            "doc_id join at the top, never riding the agg buffers — no "
-            "first() aggregates anywhere); the extraction ArrowEvalPython "
-            "sits BELOW an Exchange on (doc_id, _salt) so a 10k-span "
-            "document's Python work spreads over its 16 salt buckets "
-            "(AQE cannot see Python-time skew — it balances bytes); "
-            "two-phase collect_list reassembly reuses that exchange. "
-            "Measured on the committed 4x10k-span skew fixture "
-            "(.fixtures/spans_skew_sf0.1, local[32]): span-mode beats "
-            "doc-mode (BENCH_r05 skew_* rows; r5 session 2.64 s vs "
-            "2.99 s) with exact_match_rate 1.0 in BOTH modes. On a "
-            "4-vCPU host the current build's doc plan wins on that "
-            "fixture at 4-8 slots (2.6-2.8 s vs 3.7-4.1 s), so span "
-            "mode routes it to the doc plan.",
-            plan_of(span),
-        )
-    )
-
     q = e.queries()
     checks = {
         "q01_filter_project": "MUST show PushedFilters on l_shipdate/"
