@@ -122,6 +122,14 @@ def _extract_spans_err(spans_json: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["extracted_json", "_error"])
 
 
+# Marked nondeterministic (here and on _extract_eval_fused) as a barrier:
+# Catalyst would otherwise push a filter on the result's ``_error`` field
+# below the projection and evaluate the kernel a second time there
+# (``quarantine_split(extract_documents(df))`` ran two ArrowEvalPython
+# nodes).
+_extract_spans_err = _extract_spans_err.asNondeterministic()
+
+
 EVAL_SCHEMA = StructType(
     [
         StructField("extracted_json", StringType()),
@@ -215,6 +223,9 @@ def _extract_eval_fused(spans_json: pd.Series, gt_parse: pd.Series) -> pd.DataFr
         except Exception as exc:  # noqa: BLE001 — quarantine, never fail the job
             rows.append(("[]", "", "", 0, 0.0, f"{type(exc).__name__}: {exc}"))
     return pd.DataFrame(rows, columns=_EVAL_COLS)
+
+
+_extract_eval_fused = _extract_eval_fused.asNondeterministic()
 
 
 @F.pandas_udf(StringType())

@@ -8,10 +8,12 @@ weights, the unit of durability is a *bucket* of documents
 1. reads the commit log (marker files under ``<out>/_commits/``),
 2. anti-filters already-committed buckets from the input,
 3. processes the remaining buckets and writes them through the job's
-   one sink (``operators.sink.write_outputs``), partitioned by bucket id
-   (each bucket directory is written atomically by Spark's committer):
-   ``data/``, ``quarantine/`` and the per-bucket ``lineage/`` audit hold
-   exactly what a plain run writes, plus the ``_bucket`` partitioning,
+   one sink (``operators.sink.write_outputs``), which clusters the rows
+   on bucket id and writes them partitioned by it (each bucket directory
+   is written atomically by Spark's committer): ``data/`` and
+   ``quarantine/`` hold exactly the rows a plain run writes, plus the
+   ``_bucket`` partitioning, and ``lineage/`` holds one audit row per
+   bucket, aggregated from the rows the ``data/`` write consumed,
 4. appends one marker per bucket that completed.
 
 Any partition/bucket can therefore resume after a crash without

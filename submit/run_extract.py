@@ -26,16 +26,19 @@ sequence in reading order, and unparseable documents land in
 quarantine/ with the reason — the job never dies on a poison PDF.
 
 Output layout under ``--output``:
-    data/        extracted documents (parquet; ``_bucket=`` partitions in
-                 resume mode, written with dynamic partition overwrite)
+    data/        extracted documents (parquet; in resume mode clustered
+                 on ``_bucket`` and written as ``_bucket=`` partitions
+                 with dynamic partition overwrite)
     quarantine/  rows whose extraction errored (``_error`` column) —
                  the job never fails on a poison document; ``_bucket=``
                  partitioned in resume mode
-    lineage/     audit rows (n_docs, n_spans, checksum) over the data/
-                 files: per Spark partition in plain mode, per ``_bucket=``
-                 partition in resume mode; checksum is the order-
-                 insensitive XOR of xxhash64(doc_id, to_json(extracted)),
-                 so plain and resumed runs of one input give one global XOR
+    lineage/     audit rows (n_docs, n_spans, checksum) over the rows the
+                 data/ write consumed, aggregated from the sink's
+                 persisted frame (data/ is not read back): per Spark
+                 partition in plain mode, per ``_bucket=`` partition in
+                 resume mode; checksum is the order-insensitive XOR of
+                 xxhash64(doc_id, to_json(extracted)), so plain and
+                 resumed runs of one input give one global XOR
     _commits/    bucket commit log (resume mode)
 
 All session tuning comes from ``donut_spark.sources.session.ENGINE_CONF``

@@ -185,6 +185,15 @@ def test_checkpoint_crash_window_no_duplicates(spark, tmp_path):
     assert written.count() == docs.count()  # ...but rows appear exactly once
 
 
+def _poison_every_tenth(df):
+    """:func:`_one_span_per_text` with every tenth ``doc_id`` flagged in
+    ``_error``."""
+    return _one_span_per_text(df).withColumn(
+        "_error",
+        F.when(F.col("doc_id").cast("long") % 10 == 0, F.lit("poison")),
+    )
+
+
 def test_checkpoint_resume_routes_quarantine(spark, tmp_path):
     """Resume mode must keep data/ semantics identical to the plain
     path: errored rows go to a bucket-partitioned quarantine/, never
@@ -199,13 +208,7 @@ def test_checkpoint_resume_routes_quarantine(spark, tmp_path):
     )
     n_total = docs.count()
 
-    def transform(df):
-        return _one_span_per_text(df).withColumn(
-            "_error",
-            F.when(F.col("doc_id").cast("long") % 10 == 0, F.lit("poison")),
-        )
-
-    run_resumable(spark, docs, transform, out, n_buckets=8)
+    run_resumable(spark, docs, _poison_every_tenth, out, n_buckets=8)
     data = spark.read.parquet(os.path.join(out, "data"))
     quarantine = spark.read.parquet(os.path.join(out, "quarantine"))
     assert "_error" not in data.columns
@@ -218,6 +221,62 @@ def test_checkpoint_resume_routes_quarantine(spark, tmp_path):
     # lineage audits data/ only (good rows)
     lineage = spark.read.parquet(os.path.join(out, "lineage"))
     assert lineage.agg(F.sum("n_docs")).first()[0] == n_total - n_bad
+
+
+def _lineage_totals(lineage):
+    """(sum of ``n_docs``, global XOR of ``checksum``) of lineage rows."""
+    row = lineage.agg(
+        F.sum("n_docs").alias("n"), F.expr("bit_xor(checksum)").alias("x")
+    ).first()
+    return row.n, row.x
+
+
+def test_resume_sink_writes_one_file_per_bucket(spark, tmp_path):
+    """The resume sink clusters rows on ``_bucket`` before writing: with
+    an input of 4 scan splits, every ``data/_bucket=b/`` and
+    ``quarantine/_bucket=b/`` still holds exactly one parquet file (not
+    one per scan task), and ``lineage/`` holds one row per bucket whose
+    global counts and XOR equal ``lineage_metrics`` over a read-back of
+    ``data/``."""
+    from donut_spark.operators.checkpoint import run_resumable
+    from donut_spark.plans.lineage import lineage_metrics
+
+    src, out = str(tmp_path / "split_in"), str(tmp_path / "split_out")
+    spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
+        F.col("doc_id").cast("string"), "text"
+    ).repartition(4).write.parquet(src)
+    docs = spark.read.parquet(src)
+    assert docs.rdd.getNumPartitions() == 4
+
+    run_resumable(spark, docs, _poison_every_tenth, out, n_buckets=8)
+    for sub in ("data", "quarantine"):
+        buckets = sorted(n for n in os.listdir(f"{out}/{sub}") if n.startswith("_bucket="))
+        assert buckets == [f"_bucket={b}" for b in range(8)]
+        for name in buckets:
+            files = [
+                f for f in os.listdir(f"{out}/{sub}/{name}") if f.endswith(".parquet")
+            ]
+            assert len(files) == 1, (sub, name, files)
+
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert sorted(r._bucket for r in lineage.select("_bucket").collect()) == list(range(8))
+    recomputed = lineage_metrics(spark.read.parquet(f"{out}/data"))
+    assert _lineage_totals(lineage) == _lineage_totals(recomputed)
+
+
+def test_quarantine_split_runs_the_kernel_once(spark):
+    """Splitting an extraction frame on ``_error`` must not evaluate the
+    Python kernel a second time under the pushed-down filter: both
+    halves of both entry points plan exactly one ArrowEvalPython."""
+    from donut_spark.operators.extract import extract_and_evaluate
+    from donut_spark.plans.lineage import quarantine_split
+    from donut_spark.sources.fixtures import load_spans
+
+    spans = load_spans(spark, SF_SMALL)
+    for extracted in (extract_and_evaluate(spans), extract_documents(spans)):
+        for half in quarantine_split(extracted):
+            plan = half._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_quarantine_split(spark):
@@ -626,6 +685,7 @@ def test_plain_and_resume_runs_share_one_lineage(spark, tmp_path):
     from donut_spark.operators.checkpoint import run_resumable
     from donut_spark.operators.extract import extract_and_evaluate
     from donut_spark.operators.sink import write_outputs
+    from donut_spark.plans.lineage import lineage_metrics
 
     docs = _docs_with_poison(spark, 30)
     plain, resumed = str(tmp_path / "plain"), str(tmp_path / "resumed")
@@ -633,14 +693,17 @@ def test_plain_and_resume_runs_share_one_lineage(spark, tmp_path):
     run_resumable(spark, docs, extract_and_evaluate, resumed, n_buckets=8)
 
     def outputs(out):
-        lineage = spark.read.parquet(f"{out}/lineage").agg(
-            F.sum("n_docs").alias("n"), F.expr("bit_xor(checksum)").alias("x")
-        ).first()
+        # the sink aggregates lineage/ without reading data/ back: the
+        # audit must still match the files on disk
+        n, xor = _lineage_totals(spark.read.parquet(f"{out}/lineage"))
+        assert (n, xor) == _lineage_totals(
+            lineage_metrics(spark.read.parquet(f"{out}/data"))
+        )
         data, quarantine = (
             {r.doc_id for r in spark.read.parquet(f"{out}/{sub}").collect()}
             for sub in ("data", "quarantine")
         )
-        return lineage.n, lineage.x, data, quarantine
+        return n, xor, data, quarantine
 
     n, xor, data, quarantine = outputs(plain)
     assert outputs(resumed) == (n, xor, data, quarantine)

@@ -3,7 +3,7 @@ BENCH/plans.md, with one-line verdicts of what each plan must show.
 
 This is the artifact behind the scale claims: pushdown reached the scan,
 UDF stages are single-eval Arrow nodes, LSH joins move ids not vectors,
-the flagship is exchange-free.
+the flagship is exchange-free, the resume sink adds one rebalance.
 """
 
 from __future__ import annotations
@@ -25,8 +25,13 @@ def plan_of(df) -> str:
 
 
 def main() -> None:
+    from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
+
     import __spark_entry__ as e
     from donut_spark.operators.extract import extract_and_evaluate
+    from donut_spark.operators.sink import sink_frame
+    from donut_spark.plans.lineage import quarantine_split
     from donut_spark.sources.fixtures import load_spans
     from donut_spark.sources.session import get_spark
 
@@ -45,6 +50,27 @@ def main() -> None:
             plan_of(flag),
         )
     )
+
+    # the frame run_resumable hands to the sink: the same plan plus _bucket
+    bucketed = load_spans(spark, SF).withColumn(
+        "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(16)).cast("int")
+    )
+    frame = sink_frame(extract_and_evaluate(bucketed)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    sections.append(
+        (
+            "resume sink data write",
+            "MUST show: the data/ write reading the sink's persisted frame "
+            "(InMemoryRelation), whose plan has one ArrowEvalPython (fused "
+            "kernel) with NO Exchange below it and exactly ONE Exchange "
+            "above it: hashpartitioning on _bucket, "
+            "REBALANCE_PARTITIONS_BY_COL (one writer task per bucket "
+            "unless AQE splits an oversized one).",
+            plan_of(quarantine_split(frame)[0]),
+        )
+    )
+    frame.unpersist()
 
     q = e.queries()
     checks = {
