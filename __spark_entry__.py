@@ -615,15 +615,15 @@ def q22_extract_spans(spark, sf):
     fixture's ``expected_json`` (same json.dumps serializer), so the hash
     compares the full extracted span sequence (kind, text, media_ref,
     order) of every document byte-for-byte."""
-    from donut_spark.functions.udfs import _extract_spans_err
+    from donut_spark.functions.udfs import _extract_eval_fused
     from donut_spark.sources.fixtures import load_spans
 
     spans = load_spans(spark, sf)
     return spans.select(
         "doc_id",
-        _extract_spans_err(F.to_json("spans"))["extracted_json"].alias(
+        _extract_eval_fused(F.to_json("spans"), F.lit(None).cast("string"))[
             "extracted_json"
-        ),
+        ].alias("extracted_json"),
     )
 
 
@@ -841,7 +841,7 @@ def q30_table_ops(spark, sf):
 
 
 def q37_extract_span_parallel(spark, sf):
-    """Extraction without the fused evaluation: per-doc exact-match
+    """Extraction without ``gt_parse`` evaluation: per-doc exact-match
     flags from ``extract_documents``. The name is kept from the removed
     span-parallel plan so battery rows stay comparable across rounds.
     Oracle-backed on the invariant: every document must match its
@@ -850,11 +850,7 @@ def q37_extract_span_parallel(spark, sf):
     from donut_spark.sources.fixtures import load_spans
 
     spans = load_spans(spark, sf).select("doc_id", "spans", "expected")
-    out = extract_documents(spans)
-    return out.select(
-        "doc_id",
-        (F.col("extracted") == F.col("expected")).cast("int").alias("exact_match"),
-    )
+    return extract_documents(spans).select("doc_id", "exact_match")
 
 
 def q40_synth_tables(spark, sf):

@@ -89,47 +89,6 @@ def _extract_one(doc: list) -> List[dict]:
     return pieces
 
 
-EXTRACT_ERR_SCHEMA = StructType(
-    [
-        StructField("extracted_json", StringType()),
-        StructField("_error", StringType()),
-    ]
-)
-
-
-@F.pandas_udf(EXTRACT_ERR_SCHEMA)
-def _extract_spans_err(spans_json: pd.Series) -> pd.DataFrame:
-    """Extraction body with the S11 error channel: a poison document
-    yields ([], error string) instead of failing the task — the
-    gt-free twin of ``_extract_eval_fused``'s quarantine path, used by
-    ``extract_documents`` and therefore the streaming twin (a streaming
-    query MUST never die on one bad record)."""
-    loads, dumps = json.loads, json.dumps
-    rows = []
-    for doc_json in spans_json:
-        try:
-            rows.append(
-                (
-                    dumps(
-                        _extract_one(loads(doc_json) if doc_json else []),
-                        ensure_ascii=False,
-                    ),
-                    None,
-                )
-            )
-        except Exception as exc:  # noqa: BLE001 — quarantine, never fail
-            rows.append(("[]", f"{type(exc).__name__}: {exc}"))
-    return pd.DataFrame(rows, columns=["extracted_json", "_error"])
-
-
-# Marked nondeterministic (here and on _extract_eval_fused) as a barrier:
-# Catalyst would otherwise push a filter on the result's ``_error`` field
-# below the projection and evaluate the kernel a second time there
-# (``quarantine_split(extract_documents(df))`` ran two ArrowEvalPython
-# nodes).
-_extract_spans_err = _extract_spans_err.asNondeterministic()
-
-
 EVAL_SCHEMA = StructType(
     [
         StructField("extracted_json", StringType()),
@@ -197,19 +156,22 @@ def _eval_tree_one(gt):
 
 @F.pandas_udf(EVAL_SCHEMA)
 def _extract_eval_fused(spans_json: pd.Series, gt_parse: pd.Series) -> pd.DataFrame:
-    """Fused extraction + invariant evaluation — ONE Python node.
+    """The one spans extraction UDF: extraction, json2token/token2json
+    round-trip and nTED in one pass per document, in ONE Python node.
 
-    Chaining 2+ pandas-UDF nodes in a stage doubles the Python worker
-    pool and the Arrow hops per task; at wide parallelism that fixed
-    cost dominates small per-doc kernels. The fused body runs
-    extraction, json2token/token2json round-trip, and nTED in a single
-    pass per document.
+    Each ArrowEvalPython node re-buffers its child rows (the span
+    arrays included) and adds an Arrow hop per batch, so the operators
+    in ``operators/extract.py`` never chain a second one. A side they do
+    not need is passed as a NULL column: a NULL ``spans_json`` extracts
+    to ``[]``, and a NULL ``gt_parse`` evaluates to the fixed
+    invalid-``gt`` values of :func:`_eval_tree_one`.
 
     Error capture is INSIDE the per-document loop (reference parity:
     `test.py:147-152,187-189` pickles failing samples and continues):
-    one poison document at 10^12-row scale must never fail the task —
-    it lands in the ``_error`` column and `plans.lineage.quarantine_split`
-    routes it to the quarantine sink.
+    one poison document, in its spans or in its ``gt_parse``, never
+    fails the task — it gets ``extracted_json = "[]"`` and the
+    ``"<Class>: <message>"`` text in ``_error``, and
+    `plans.lineage.quarantine_split` routes it to the quarantine sink.
     """
     loads, dumps = json.loads, json.dumps
     rows = []
@@ -225,6 +187,14 @@ def _extract_eval_fused(spans_json: pd.Series, gt_parse: pd.Series) -> pd.DataFr
     return pd.DataFrame(rows, columns=_EVAL_COLS)
 
 
+# Marked nondeterministic as a barrier: Catalyst would otherwise push a
+# filter on the result's ``_error`` field below the projection and
+# evaluate the kernel a second time there (each half of
+# ``quarantine_split`` would plan two ArrowEvalPython nodes). The side
+# effect: Catalyst no longer collapses a projection over the result into
+# the one that calls the UDF, so any second Python UDF over an
+# extraction frame plans a second ArrowEvalPython node. That is why the
+# operators route every spans evaluation through this one UDF.
 _extract_eval_fused = _extract_eval_fused.asNondeterministic()
 
 
@@ -249,39 +219,6 @@ def repair_table(compact: pd.Series) -> pd.Series:
 
 
 # ---- tree linearization ----
-
-
-TREE_EVAL_SCHEMA = StructType(
-    [
-        StructField("token_seq", StringType()),
-        StructField("pred_parse", StringType()),
-        StructField("roundtrip_ok", IntegerType()),
-        StructField("nted", DoubleType()),
-    ]
-)
-
-
-@F.pandas_udf(TREE_EVAL_SCHEMA)
-def _tree_eval_fused(gt_parse: pd.Series) -> pd.DataFrame:
-    """The gt_parse-only half of :func:`_extract_eval_fused` as ONE
-    Python node: json2token → token2json → roundtrip → nTED.
-
-    Exists for ``evaluate_extraction`` over frames already extracted by
-    ``extract_documents``: chaining the four single-purpose UDFs builds
-    four ArrowEvalPython nodes, and EACH one's row queue re-buffers the
-    child rows — which there carry the ``extracted``/``expected``/
-    ``spans`` arrays, multi-MB per media-heavy document. Measured on
-    the 4×40k-span skew fixture the chain costs ~20 s against ~1 s
-    fused. Per-element semantics are identical to the
-    chained kernels (same ``tree`` calls, same ``_parse_or_empty``
-    null/garbage coercion for nTED)."""
-    rows = []
-    for gt in gt_parse:
-        seq, pred, ok, nted = _eval_tree_one(gt)
-        rows.append((seq, pred, int(ok), nted))
-    return pd.DataFrame(
-        rows, columns=["token_seq", "pred_parse", "roundtrip_ok", "nted"]
-    )
 
 
 @F.pandas_udf(StringType())

@@ -196,6 +196,17 @@ def synth_pdf_table(spark: SparkSession, spans_df: DataFrame) -> DataFrame:
     return src.mapInPandas(gen, schema=PDF_TABLE_SCHEMA)
 
 
+def _poison_reason(exc: Exception) -> str:
+    """The ``_error`` / error-span text of a PDF the parser refused.
+    ``ValueError`` is the parser's own poison signal and keeps its bare
+    message (the q55 hash and the reason tests read it); any other class
+    escaping the parser (e.g. ``RecursionError`` on deeply nested
+    arrays) is named, as in the spans UDF's error channel."""
+    if isinstance(exc, ValueError):
+        return str(exc)
+    return f"{type(exc).__name__}: {exc}"
+
+
 def extract_pdf_spans(pdf_df: DataFrame) -> DataFrame:
     """(doc_id, content) → interleaved spans in READING order.
 
@@ -217,9 +228,10 @@ def extract_pdf_spans(pdf_df: DataFrame) -> DataFrame:
             for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
                 try:
                     pages = parse_pdf_spans(bytes(content))
-                except ValueError as e:
+                except Exception as e:  # noqa: BLE001 — quarantine, never fail
+                    reason = _poison_reason(e)
                     rows.append(
-                        (doc_id, -1, -1, "error", str(e), None, 0.0, 0.0, 0.0)
+                        (doc_id, -1, -1, "error", reason, None, 0.0, 0.0, 0.0)
                     )
                     continue
                 seq = 0
@@ -325,23 +337,23 @@ PDF_DOCS_SCHEMA = StructType(
 def pdf_documents_from_table(pdf_df: DataFrame) -> DataFrame:
     """Production-input twin of :func:`pdf_extract_documents`: a table
     of REAL PDFs ``(doc_id, content binary [, passthrough cols])`` →
-    one row per document with the extracted interleaved span array and
+    one row per input row with the extracted interleaved span array and
     an ``_error`` column (null = parsed; non-null = the poison reason)
     — exactly ``plans.lineage.quarantine_split``'s input shape, so
     ``submit/run_extract.py --modality pdf`` routes bad documents to
-    quarantine/ and never dies on one (S11). Passthrough columns (e.g.
-    the resume path's ``_bucket``) ride the doc_id join; the PDF bytes
-    are dropped from the output.
+    quarantine/ and never dies on one (S11). Any exception the parser
+    raises is a poison reason (see :func:`_poison_reason`).
+    Passthrough columns (e.g. the resume path's ``_bucket``) ride
+    through the kernel in their own row; the PDF bytes are dropped from
+    the output.
 
-    Scale/plan shape (round-6): ONE map-only Arrow kernel parses each
-    document exactly once and emits the finished per-doc row — a PDF's
-    spans already live in its own input row, so reading order is
-    reassembled inside the kernel instead of through a
-    collect_list/array_sort aggregation. The old shape branched the
-    span-level parse into a reassembly agg AND an error-row filter,
-    which re-evaluated the Python parse per branch (two MapInPandas
-    nodes, every byte parsed twice) and paid a doc_id exchange for the
-    agg; this one parses once with zero shuffles (plans/r06/
+    Scale/plan shape: ONE map-only Arrow kernel parses each document
+    exactly once and emits the finished per-doc row — a PDF's spans
+    already live in its own input row, so reading order is reassembled
+    inside the kernel instead of through a collect_list/array_sort
+    aggregation, and passthrough columns need no join back on
+    ``doc_id``: one scan, zero shuffles, one output row per input row
+    even when a ``doc_id`` repeats (plans/r06/
     pdf_parse_{before,after}.txt: 2 MapInPandas + 1 Exchange → 1
     MapInPandas + 0 Exchange).
     """
@@ -352,12 +364,13 @@ def pdf_documents_from_table(pdf_df: DataFrame) -> DataFrame:
         from ..core.pdf import parse_pdf_spans
 
         for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
+            extracted, errors = [], []
+            for content in pdf["content"]:
                 try:
                     pages = parse_pdf_spans(bytes(content))
-                except ValueError as e:
-                    rows.append((doc_id, None, str(e)))
+                except Exception as e:  # noqa: BLE001 — quarantine, never fail
+                    extracted.append(None)
+                    errors.append(_poison_reason(e))
                     continue
                 spans = []
                 seq = 0
@@ -382,13 +395,19 @@ def pdf_documents_from_table(pdf_df: DataFrame) -> DataFrame:
                                 }
                             )
                         seq += 1
-                rows.append((doc_id, spans, None))
-            yield pd.DataFrame(rows, columns=["doc_id", "extracted", "_error"])
+                extracted.append(spans)
+                errors.append(None)
+            out = pdf.drop(columns="content")
+            out["extracted"] = pd.Series(extracted, index=out.index, dtype=object)
+            out["_error"] = pd.Series(errors, index=out.index, dtype=object)
+            yield out
 
-    parsed = pdf_df.select("doc_id", "content").mapInPandas(
-        parse_docs, schema=PDF_DOCS_SCHEMA
-    )
     extra = [c for c in pdf_df.columns if c not in ("doc_id", "content")]
-    if not extra:
-        return parsed
-    return pdf_df.drop("content").join(parsed, "doc_id", "left")
+    schema = StructType(
+        PDF_DOCS_SCHEMA.fields[:1]
+        + [pdf_df.schema[c] for c in extra]
+        + PDF_DOCS_SCHEMA.fields[1:]
+    )
+    return pdf_df.select("doc_id", "content", *extra).mapInPandas(
+        parse_docs, schema=schema
+    )

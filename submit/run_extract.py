@@ -68,8 +68,14 @@ def main() -> None:
     # driver-side, but failing fast on bad args shouldn't need the JVM.
     from pyspark.sql import SparkSession
 
-    from donut_spark.operators.extract import extract_and_evaluate, extract_documents
     from donut_spark.sources.session import ENGINE_CONF
+
+    if args.modality == "pdf":
+        from donut_spark.operators.pdfparse import (
+            pdf_documents_from_table as extract,
+        )
+    else:
+        from donut_spark.operators.extract import extract_documents as extract
 
     builder = SparkSession.builder.appName("donut_spark_extract")
     for key, value in ENGINE_CONF.items():
@@ -79,17 +85,6 @@ def main() -> None:
     spark = builder.getOrCreate()
 
     spans = spark.read.parquet(args.input)
-
-    def extract(df):
-        if args.modality == "pdf":
-            from donut_spark.operators.pdfparse import (
-                pdf_documents_from_table,
-            )
-
-            return pdf_documents_from_table(df)
-        if "gt_parse" in df.columns:
-            return extract_and_evaluate(df)
-        return extract_documents(df)
 
     if args.resume:
         from donut_spark.operators.checkpoint import run_resumable

@@ -1065,6 +1065,104 @@ def test_pdf_documents_from_table_contract(spark):
         out.unpersist()
 
 
+def _recursion_bomb_pdf() -> bytes:
+    """A PDF with 3000 ``[`` inserted after its first ``obj``: under
+    the default recursion limit (a Python worker's), the parser's
+    nested-array recursion raises ``RecursionError``, not its own
+    ``ValueError``."""
+    from donut_spark.core.pdf import encode_pdf
+
+    pdf = encode_pdf([[("text", 72.0, 720.0, 10.0, "hello world")]])
+    cut = pdf.index(b"obj") + 3
+    return pdf[:cut] + b"[" * 3000 + pdf[cut:]
+
+
+def test_pdf_recursion_bomb_quarantined_by_both_operators(spark, tmp_path):
+    """The PDF kernel boundary is total: a PDF the parser fails on with
+    a non-``ValueError`` exception is quarantined by
+    ``pdf_documents_from_table`` (through the sink) and becomes an
+    ``error`` span row of ``extract_pdf_spans``, with the class named,
+    while the ``ValueError`` reason text stays bare."""
+    from pyspark.sql import functions as F
+
+    from donut_spark.operators.pdfparse import (
+        PDF_TABLE_SCHEMA,
+        extract_pdf_spans,
+        pdf_documents_from_table,
+        synth_pdf_table,
+    )
+    from donut_spark.operators.sink import write_outputs
+    from donut_spark.sources.fixtures import load_spans
+    from tests.conftest import SF_SMALL
+
+    spans = load_spans(spark, SF_SMALL).filter(
+        F.expr("try_cast(doc_id AS bigint) < 5")
+    )
+    poison = spark.createDataFrame(
+        [
+            ("bomb", _recursion_bomb_pdf()),
+            ("bad_doc", b"%PDF-1.4 garbage, no xref"),
+        ],
+        schema=PDF_TABLE_SCHEMA,
+    )
+    pdfs = synth_pdf_table(spark, spans).union(poison)
+
+    out = str(tmp_path / "pdf_out")
+    write_outputs(spark, pdf_documents_from_table(pdfs), out)
+    bad = {
+        r.doc_id: r._error
+        for r in spark.read.parquet(f"{out}/quarantine").collect()
+    }
+    assert sorted(bad) == ["bad_doc", "bomb"]
+    assert bad["bomb"].startswith("RecursionError: ")
+    assert not bad["bad_doc"].startswith("ValueError")
+    assert spark.read.parquet(f"{out}/data").count() == 5
+
+    errs = {
+        r.doc_id: r.text
+        for r in extract_pdf_spans(pdfs).filter(F.col("kind") == "error").collect()
+    }
+    assert errs == bad
+
+
+def test_pdf_passthrough_columns_ride_the_kernel(spark, tmp_path):
+    """Passthrough columns (resume mode's ``_bucket``) ride through the
+    parse kernel: one scan, no join, and exactly one output row per
+    input row even when a ``doc_id`` repeats. Without passthrough
+    columns the output schema is the kernel's own."""
+    from pyspark.sql import functions as F
+
+    from donut_spark.operators.pdfparse import (
+        PDF_DOCS_SCHEMA,
+        pdf_documents_from_table,
+        synth_pdf_table,
+    )
+    from donut_spark.sources.fixtures import load_spans
+    from tests.conftest import SF_SMALL
+
+    spans = load_spans(spark, SF_SMALL).filter(
+        F.expr("try_cast(doc_id AS bigint) < 6")
+    )
+    pdfs = synth_pdf_table(spark, spans).withColumn(
+        "_bucket", F.col("doc_id").cast("int") % 2
+    )
+    src = str(tmp_path / "pdf_in")
+    duplicate = pdfs.filter(F.col("doc_id") == "3").withColumn("_bucket", F.lit(7))
+    pdfs.union(duplicate).write.parquet(src)
+    table = spark.read.parquet(src)
+
+    out = pdf_documents_from_table(table)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1, plan
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    assert out.columns == ["doc_id", "_bucket", "extracted", "_error"]
+    rows = sorted((r.doc_id, r._bucket) for r in out.collect())
+    assert rows == sorted((r.doc_id, r._bucket) for r in table.collect())
+    assert len(rows) == 7
+    docs = pdf_documents_from_table(table.drop("_bucket"))
+    assert docs.schema == PDF_DOCS_SCHEMA
+
+
 def test_materialize_pdf_table_writes_under_out_root(spark, tmp_path):
     """Both the PDF table and the spans table it is synthesized from land
     under ``out_root``, never under the default fixtures directory."""

@@ -266,17 +266,109 @@ def test_resume_sink_writes_one_file_per_bucket(spark, tmp_path):
 
 def test_quarantine_split_runs_the_kernel_once(spark):
     """Splitting an extraction frame on ``_error`` must not evaluate the
-    Python kernel a second time under the pushed-down filter: both
-    halves of both entry points plan exactly one ArrowEvalPython."""
+    Python kernel a second time under the pushed-down filter, and the
+    operator pair must not add a second Python node: each entry point,
+    and both halves of its split, plan exactly one ArrowEvalPython."""
     from donut_spark.operators.extract import extract_and_evaluate
     from donut_spark.plans.lineage import quarantine_split
     from donut_spark.sources.fixtures import load_spans
 
     spans = load_spans(spark, SF_SMALL)
-    for extracted in (extract_and_evaluate(spans), extract_documents(spans)):
-        for half in quarantine_split(extracted):
+    for extracted in (
+        extract_and_evaluate(spans),
+        extract_documents(spans),
+        evaluate_extraction(extract_documents(spans)),
+    ):
+        for half in (extracted, *quarantine_split(extracted)):
             plan = half._jdf.queryExecution().executedPlan().toString()
             assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def _docs_with_deep_gt(spark, n):
+    """``n`` healthy SynthDoG-style documents plus one (``doc_id``
+    'deep_gt') with healthy spans whose ``gt_parse`` nests 20 000 deep:
+    parsing it raises ``RecursionError``."""
+    from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA
+
+    rows = [
+        (f"ok_{i}", *synth_doc(f"ok_{i}", "alpha beta gamma delta")) for i in range(n)
+    ]
+    spans, expected, _gt = synth_doc("deep_gt", "alpha beta gamma delta")
+    rows.append(("deep_gt", spans, expected, "[" * 20_000 + "]" * 20_000))
+    return spark.createDataFrame(rows, SPANS_TABLE_SCHEMA)
+
+
+def test_deep_gt_parse_quarantined_through_every_entry_point(spark, tmp_path):
+    """A ``gt_parse`` too deep to parse is a poison document on every
+    public spans entry point: it reaches quarantine/ with
+    ``RecursionError`` in ``_error``, the job completes, and every
+    healthy document evaluates clean in data/."""
+    from donut_spark.operators.extract import extract_and_evaluate
+    from donut_spark.operators.sink import write_outputs
+
+    docs = _docs_with_deep_gt(spark, 6)
+    truth = docs.select("doc_id", "expected", "gt_parse")
+    entry_points = {
+        "extract_documents": extract_documents(docs),
+        "extract_and_evaluate": extract_and_evaluate(docs),
+        "pair": evaluate_extraction(extract_documents(docs)),
+        "joined_truth": evaluate_extraction(
+            extract_documents(docs.select("doc_id", "spans")).join(truth, "doc_id")
+        ),
+    }
+    for name, evaluated in entry_points.items():
+        out = str(tmp_path / name)
+        write_outputs(spark, evaluated, out)
+        bad = spark.read.parquet(f"{out}/quarantine").select("doc_id", "_error")
+        bad_rows = bad.collect()
+        assert [r.doc_id for r in bad_rows] == ["deep_gt"], name
+        assert bad_rows[0]._error.startswith("RecursionError: "), name
+        g = spark.read.parquet(f"{out}/data").agg(
+            F.count("*").alias("n"),
+            F.min("exact_match").alias("em"),
+            F.min("roundtrip_ok").alias("rt"),
+            F.min("nted").alias("nted"),
+        ).first()
+        assert (g.n, g.em, g.rt, g.nted) == (6, 1, 1, 1.0), name
+
+
+def test_operator_pair_matches_one_operator_and_kernels(spark):
+    """Parity pin: ``evaluate_extraction(extract_documents(df))`` gives
+    ``extract_and_evaluate``'s columns and values for every document,
+    and those values are the Python kernels' own (``_extract_one``,
+    ``_eval_tree_one``) applied directly. Without ``gt_parse`` the
+    operator adds only ``extracted`` and ``_error``, with the same
+    extraction."""
+    from donut_spark.functions.udfs import _eval_tree_one, _extract_one
+    from donut_spark.operators.extract import extract_and_evaluate
+
+    spans = _with_outlier(spark, build_spans_table(spark, SF_SMALL))
+    pair = evaluate_extraction(extract_documents(spans))
+    one = extract_and_evaluate(spans)
+    assert pair.columns == one.columns
+    got = {r.doc_id: r for r in pair.collect()}
+    assert got == {r.doc_id: r for r in one.collect()}
+    bare = extract_documents(spans.select("doc_id", "spans"))
+    assert bare.columns == ["doc_id", "spans", "extracted", "_error"]
+    assert {r.doc_id: (r.extracted, r._error) for r in bare.collect()} == {
+        k: (r.extracted, r._error) for k, r in got.items()
+    }
+
+    docs = spans.collect()
+    assert set(got) == {d.doc_id for d in docs}
+    for d in docs:
+        r = got[d.doc_id]
+        assert [s.asDict() for s in r.extracted] == _extract_one(
+            [s.asDict() for s in d.spans]
+        )
+        seq, pred, ok, nted = _eval_tree_one(d.gt_parse)
+        assert (r.token_seq, r.pred_parse, r.roundtrip_ok, r.nted) == (
+            seq,
+            pred,
+            int(ok),
+            nted,
+        )
+        assert r._error is None
 
 
 def test_quarantine_split(spark):

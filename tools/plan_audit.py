@@ -29,7 +29,11 @@ def main() -> None:
     from pyspark.storagelevel import StorageLevel
 
     import __spark_entry__ as e
-    from donut_spark.operators.extract import extract_and_evaluate
+    from donut_spark.operators.extract import (
+        evaluate_extraction,
+        extract_and_evaluate,
+        extract_documents,
+    )
     from donut_spark.operators.sink import sink_frame
     from donut_spark.plans.lineage import quarantine_split
     from donut_spark.sources.fixtures import load_spans
@@ -48,6 +52,20 @@ def main() -> None:
             "NO Exchange anywhere (map-only; scan splits provide "
             "parallelism).",
             plan_of(flag),
+        )
+    )
+
+    # skew_span's chain: evaluate_extraction over extract_documents adds
+    # only the JVM-side columns the operator did not already add
+    pair = evaluate_extraction(extract_documents(load_spans(spark, SF)))
+    sections.append(
+        (
+            "skew_span operator pair",
+            "MUST show: evaluate_extraction(extract_documents(df)) as the "
+            "same plan as the flagship — one FileScan, ONE ArrowEvalPython "
+            "(the one spans UDF), NO Exchange; evaluate_extraction adds no "
+            "Python node over the operator's output.",
+            plan_of(pair),
         )
     )
 
