@@ -153,71 +153,125 @@ _DELIM = b"()<>[]{}/%"
 # lexer / object parser
 # ---------------------------------------------------------------------------
 
+# One compiled pattern reads a token per ``match``; ``lastgroup`` names
+# its kind. The atomic prefix skips whitespace and comments and never
+# gives any back, so no failed branch re-reads a comment's tail as a
+# token; group 1 ends where the token starts. Branch order is grammar
+# (``n g R`` before a number, ``<<`` before a hex string). Literal
+# strings with escapes or nested parens, hex strings with non-digits
+# and names with ``#xx`` escapes go to the exact readers below.
+_SKIP = rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*)"
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+_TOKEN = re.compile(
+    b"(" + _SKIP + b")(?:"
+    rb"(?P<ref>(?P<rnum>[+-]?\d+)(?![.\d])" + _SKIP
+    + rb"(?P<gen>[+-]?\d+)(?![.\d])" + _SKIP + b"R(?!" + _REGULAR + b"))"
+    rb"|(?P<num>[+-]?(?:\d+\.?\d*|\.\d+))"
+    rb"|(?P<badnum>[+.-])"
+    rb"|/(?P<name>" + _REGULAR + b"*)"
+    rb"|\((?P<str>[^()\\]*)\)"
+    rb"|(?P<dict><<)"
+    rb"|<(?P<hex>[0-9A-Fa-f]*)>"
+    rb"|(?P<array>\[)"
+    rb"|(?P<aend>\])"
+    rb"|(?P<dend>>>)"
+    rb"|(?P<word>" + _REGULAR + b"+)"
+    rb"|(?P<lstr>\()"
+    rb"|(?P<hstr><)"
+    rb"|(?P<delim>[)>{}])"
+    rb"|(?P<eof>\Z))"
+).match
+
+_STRAY = frozenset(("aend", "dend", "delim"))  # kinds no object starts with
+_CONSTANTS = {b"true": True, b"false": False, b"null": None}
+
 
 class _Lexer:
-    """Single-pass object lexer over raw PDF bytes (file or content)."""
+    """Object parser over PDF bytes at read position ``i``. Arrays and
+    dicts recurse (one and two frames a level), so a nesting bomb ends in
+    ``RecursionError``, which the operator boundary names."""
 
     def __init__(self, data: bytes, pos: int = 0):
         self.b = data
         self.i = pos
 
-    # Tokenizer fast paths (round-6): whitespace/comment runs and bare
-    # token words are matched with ONE precompiled C-level regex step
-    # instead of a per-byte Python loop — the two were the top entries
-    # of the parse profile (~35% of tottime). Character classes are the
-    # literal _WHITESPACE/_DELIM sets; comment semantics (% to CR/LF,
-    # EOL consumed by the following whitespace alternative) unchanged.
-    _WS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
-    _WORD_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
-
-    def _skip_ws(self) -> None:
-        m = self._WS_RE.match(self.b, self.i)
-        if m:
-            self.i = m.end()
-
-    def _read_token_word(self) -> bytes:
-        """A bare keyword token (obj/endobj/stream/R/true/BT/Tj/...)."""
-        self._skip_ws()
-        m = self._WORD_RE.match(self.b, self.i)
+    def keyword(self, word: bytes) -> bool:
+        """Consume the next token if it is the bare keyword ``word``."""
+        m = _TOKEN(self.b, self.i)
+        if m["word"] != word:
+            return False
         self.i = m.end()
-        return m.group(0)
+        return True
 
-    # -- terminals ----------------------------------------------------------
+    def read_obj(self, allow_ref: bool = True) -> PdfObj:
+        return self.value(_TOKEN(self.b, self.i), allow_ref)
 
-    _NUM_RE = re.compile(rb"[+-]?(\d+\.?\d*|\.\d+)")
-
-    def _read_number(self, allow_ref: bool = True) -> Union[int, float, Ref]:
-        m = self._NUM_RE.match(self.b, self.i)
-        if not m:
+    def value(self, m: "re.Match", allow_ref: bool = True) -> PdfObj:
+        """The object token ``m`` starts; leaves ``i`` just after it."""
+        kind = m.lastgroup
+        self.i = m.end()
+        if kind == "num":
+            tok = m["num"]
+            return float(tok) if b"." in tok else int(tok)
+        if kind == "name" and b"#" not in m["name"]:
+            return Name(m["name"].decode("latin-1"))
+        if kind == "ref":
+            if allow_ref:
+                return Ref(int(m["rnum"]), int(m["gen"]))
+            self.i = m.end("rnum")
+            return int(m["rnum"])
+        if kind == "str":
+            return m["str"]
+        if kind == "dict":
+            return self._read_dict(allow_ref)
+        if kind == "array":
+            arr: list = []
+            while True:
+                m = _TOKEN(self.b, self.i)
+                if m.lastgroup == "aend":
+                    self.i = m.end()
+                    return arr
+                arr.append(self.value(m, allow_ref))
+        if kind == "hex":  # an odd final digit is padded with 0
+            return bytes.fromhex(m["hex"].decode() + "0" * (len(m["hex"]) % 2))
+        if kind == "word":
+            if m["word"] in _CONSTANTS:
+                return _CONSTANTS[m["word"]]
+            raise ValueError(f"pdf: unexpected token {m['word']!r} at {self.i}")
+        self.i = m.end(1)
+        if kind == "name":
+            return self._read_escaped_name()
+        if kind == "lstr":
+            return self._read_literal_string()
+        if kind == "hstr":
+            return self._read_hex_string()
+        if kind == "eof":
+            raise ValueError("pdf: unexpected EOF")
+        if kind == "badnum":
             raise ValueError(f"pdf: bad number at {self.i}")
-        tok = m.group(0)
-        self.i = m.end()
-        if b"." in tok:
-            return float(tok)
-        val = int(tok)
-        if not allow_ref:
-            return val
-        # lookahead for "<gen> R" (indirect reference)
-        save = self.i
-        self._skip_ws()
-        m2 = self._NUM_RE.match(self.b, self.i)
-        if m2 and b"." not in m2.group(0):
-            self.i = m2.end()
-            if self._read_token_word() == b"R":
-                return Ref(val, int(m2.group(0)))
-        self.i = save
-        return val
+        raise ValueError(f"pdf: unexpected token b'' at {self.i}")
 
-    def _read_name(self) -> Name:
+    def _read_dict(self, allow_ref: bool = True) -> dict:
+        d: dict = {}
+        while True:
+            m = _TOKEN(self.b, self.i)
+            kind = m.lastgroup
+            if kind == "dend":
+                self.i = m.end()
+                return d
+            if kind == "name" and b"#" not in m["name"]:
+                key = m["name"].decode("latin-1")
+                self.i = m.end()
+            else:
+                key = self.value(m, allow_ref)
+                if not isinstance(key, Name):
+                    raise ValueError("pdf: dict key is not a name")
+            d[str(key)] = self.value(_TOKEN(self.b, self.i), allow_ref)
+
+    # -- the exact readers the token pattern leaves the hard cases to -------
+
+    def _read_escaped_name(self) -> Name:
         assert self.b[self.i : self.i + 1] == b"/"
-        # fast path: '#' and hex digits are regular (non-delimiter) name
-        # chars, so one regex step captures the whole raw token; names
-        # without #xx escapes (virtually all) decode directly
-        m = self._WORD_RE.match(self.b, self.i + 1)
-        tok = m.group(0)
-        if b"#" not in tok:
-            self.i = m.end()
-            return Name(tok.decode("latin-1"))
         b, n = self.b, len(self.b)
         i = self.i + 1
         out = bytearray()
@@ -296,55 +350,6 @@ class _Lexer:
         if len(hx) % 2:
             hx += b"0"
         return bytes.fromhex(hx.decode("ascii"))
-
-    # -- composite ----------------------------------------------------------
-
-    def read_obj(self, allow_ref: bool = True) -> PdfObj:
-        self._skip_ws()
-        c = self.b[self.i : self.i + 1]
-        if not c:
-            raise ValueError("pdf: unexpected EOF")
-        if c == b"<":
-            if self.b[self.i : self.i + 2] == b"<<":
-                return self._read_dict(allow_ref)
-            return self._read_hex_string()
-        if c == b"(":
-            return self._read_literal_string()
-        if c == b"/":
-            return self._read_name()
-        if c == b"[":
-            self.i += 1
-            arr: list = []
-            while True:
-                self._skip_ws()
-                if self.b[self.i : self.i + 1] == b"]":
-                    self.i += 1
-                    return arr
-                arr.append(self.read_obj(allow_ref))
-        if c in b"+-.0123456789":
-            return self._read_number(allow_ref)
-        word = self._read_token_word()
-        if word == b"true":
-            return True
-        if word == b"false":
-            return False
-        if word == b"null":
-            return None
-        raise ValueError(f"pdf: unexpected token {word!r} at {self.i}")
-
-    def _read_dict(self, allow_ref: bool = True) -> dict:
-        assert self.b[self.i : self.i + 2] == b"<<"
-        self.i += 2
-        d: dict = {}
-        while True:
-            self._skip_ws()
-            if self.b[self.i : self.i + 2] == b">>":
-                self.i += 2
-                return d
-            key = self.read_obj(allow_ref)
-            if not isinstance(key, Name):
-                raise ValueError("pdf: dict key is not a name")
-            d[str(key)] = self.read_obj(allow_ref)
 
 
 # ---------------------------------------------------------------------------
@@ -735,7 +740,6 @@ def parse_tounicode(data: bytes) -> Tuple[Optional[int], Dict[int, str]]:
     ``usecmap`` composition is outside the subset and is ignored like
     the other scaffolding words (its operands parse as plain tokens)."""
     lx = _Lexer(data)
-    n = len(data)
     mapping: Dict[int, str] = {}
     code_len: Optional[int] = None
 
@@ -748,31 +752,32 @@ def parse_tounicode(data: bytes) -> Tuple[Optional[int], Dict[int, str]]:
     def read_items(end_word: bytes) -> list:
         items: list = []
         while True:
-            lx._skip_ws()
-            if lx.i >= n:
+            m = _TOKEN(data, lx.i)
+            kind = m.lastgroup
+            if kind == "eof":
                 raise ValueError("pdf: unterminated CMap block")
-            c = data[lx.i : lx.i + 1]
-            if c in b"(<[/+-.0123456789":
-                items.append(lx.read_obj(allow_ref=False))
-            else:
-                w = lx._read_token_word()
+            if kind == "word" or kind in _STRAY:
+                w = m["word"] or b""
                 if w == end_word:
+                    lx.i = m.end()
                     return items
                 raise ValueError(f"pdf: unexpected {w!r} in CMap block")
+            items.append(lx.value(m, allow_ref=False))
             if len(items) > _MAX_CMAP_ITEMS:
                 raise ValueError("pdf: CMap too large")
 
-    while lx.i < n:
-        lx._skip_ws()
-        if lx.i >= n:
+    while True:
+        m = _TOKEN(data, lx.i)
+        kind = m.lastgroup
+        if kind == "eof":
             break
-        c = data[lx.i : lx.i + 1]
-        if c in b"(<[/+-.0123456789":
-            lx.read_obj(allow_ref=False)
-            continue
-        w = lx._read_token_word()
-        if not w:
+        if kind in _STRAY:
             raise ValueError("pdf: bad CMap syntax")
+        if kind != "word":
+            lx.value(m, allow_ref=False)
+            continue
+        lx.i = m.end()
+        w = m["word"]
         if w == b"begincodespacerange":
             items = read_items(b"endcodespacerange")
             if items and isinstance(items[0], bytes) and 1 <= len(items[0]) <= 4:
@@ -1086,23 +1091,16 @@ class PdfDocument:
 
     def _load_xref_section(self, off: int) -> Optional[int]:
         lx = _Lexer(self.b, off)
-        save = lx.i
-        if lx._read_token_word() != b"xref":
+        if not lx.keyword(b"xref"):
             # an integer object header here is a 1.5+ xref STREAM
-            lx.i = save
             return self._load_xref_stream(off)
         entries: List[Tuple[int, int]] = []
-        while True:
-            save = lx.i
-            word = lx._read_token_word()
-            if word == b"trailer":
-                break
-            lx.i = save
+        while not lx.keyword(b"trailer"):
             first = lx.read_obj()
             count = lx.read_obj()
             if not isinstance(first, int) or not isinstance(count, int):
                 raise ValueError("pdf: bad xref subsection header")
-            lx._skip_ws()
+            lx.i = _TOKEN(self.b, lx.i).end(1)  # fixed-width entries
             for k in range(count):
                 entry = self.b[lx.i : lx.i + 20]
                 if len(entry) < 18:
@@ -1148,7 +1146,7 @@ class PdfDocument:
         if (
             not isinstance(num, int)
             or not isinstance(gen, int)
-            or lx._read_token_word() != b"obj"
+            or not lx.keyword(b"obj")
         ):
             raise ValueError(
                 "pdf: cross-reference section is neither table nor stream"
@@ -1156,7 +1154,7 @@ class PdfDocument:
         d = lx.read_obj()
         if not isinstance(d, dict) or d.get("Type") != Name("XRef"):
             raise ValueError("pdf: xref stream dict is not /Type /XRef")
-        if lx._read_token_word() != b"stream":
+        if not lx.keyword(b"stream"):
             raise ValueError("pdf: xref stream without stream data")
         i = lx.i
         if self.b[i : i + 2] == b"\r\n":
@@ -1249,12 +1247,10 @@ class PdfDocument:
                 raise ValueError(
                     f"pdf: xref offset for obj {ref.num} is wrong"
                 )
-            if lx._read_token_word() != b"obj":
+            if not lx.keyword(b"obj"):
                 raise ValueError("pdf: missing obj keyword")
             val = lx.read_obj()
-            save = lx.i
-            word = lx._read_token_word()
-            if word == b"stream":
+            if lx.keyword(b"stream"):
                 if not isinstance(val, dict):
                     raise ValueError("pdf: stream without dict")
                 i = lx.i  # EOL after 'stream' is CRLF or LF
@@ -1266,8 +1262,6 @@ class PdfDocument:
                 if not isinstance(length, int) or i + length > len(self.b):
                     raise ValueError("pdf: stream /Length bad or truncated")
                 val = Stream(val, self.b[i : i + length])
-            else:
-                lx.i = save
         finally:
             self._loading.discard(ref.num)
         # strings/streams of directly-stored objects are encrypted with
@@ -1599,6 +1593,7 @@ def _interpret_content(
     fonts: Optional[FontMap] = None,
 ) -> List[Span]:
     lx = _Lexer(content)
+    i = 0
     spans: List[Span] = []
     stack: list = []
     ctm = _IDENT
@@ -1634,18 +1629,28 @@ def _interpret_content(
         return new, new
 
     while True:
-        lx._skip_ws()
-        if lx.i >= n:
-            break
-        c = content[lx.i : lx.i + 1]
-        if c in b"(<[/+-.0123456789":
-            # operand: number/string/array/name/dict (content streams
-            # carry no indirect refs per spec)
-            stack.append(lx.read_obj(allow_ref=False))
+        m = _TOKEN(content, i)
+        kind = m.lastgroup
+        if kind != "word":
+            if kind == "num":
+                tok = m["num"]
+                stack.append(float(tok) if b"." in tok else int(tok))
+                i = m.end()
+            elif kind == "str":
+                stack.append(m["str"])
+                i = m.end()
+            elif kind == "eof":
+                break
+            elif kind in _STRAY:
+                raise ValueError(
+                    f"pdf: unexpected delimiter {m[kind]!r} at {m.end(1)}"
+                )
+            else:  # content streams carry no indirect refs per spec
+                stack.append(lx.value(m, allow_ref=False))
+                i = lx.i
             continue
-        op = lx._read_token_word()
-        if not op:
-            break
+        op = m["word"]
+        i = m.end()
         if op == b"BT":
             in_text, tm, tlm = True, _IDENT, _IDENT
         elif op == b"ET":
@@ -1664,7 +1669,7 @@ def _interpret_content(
             leading = -float(stack[-1])
             tm, tlm = next_line(float(stack[-2]), float(stack[-1]))
         elif op == b"Tm":
-            tm = tlm = tuple(float(v) for v in stack[-6:])
+            tm = tlm = tuple(map(float, stack[-6:]))
         elif op == b"T*":
             tm, tlm = next_line(0.0, -leading)
         elif op == b"Tj":
@@ -1698,15 +1703,13 @@ def _interpret_content(
             # (masks, rules, icons) — consumed, never a content span;
             # document-level media rides named-XObject /Do refs.
             d: dict = {}
-            while True:
-                lx._skip_ws()
-                if content[lx.i : lx.i + 1] == b"/":
-                    key = lx.read_obj(allow_ref=False)
-                    d[str(key)] = lx.read_obj(allow_ref=False)
-                else:
-                    if lx._read_token_word() != b"ID":
-                        raise ValueError("pdf: bad inline image dict")
-                    break
+            lx.i = i
+            while not lx.keyword(b"ID"):
+                m = _TOKEN(content, lx.i)
+                if m.lastgroup != "name":
+                    raise ValueError("pdf: bad inline image dict")
+                key = lx.value(m, allow_ref=False)
+                d[str(key)] = lx.read_obj(allow_ref=False)
             i2 = lx.i
             if i2 < n and content[i2 : i2 + 1] in _WHITESPACE:
                 i2 += 1  # exactly one whitespace after ID, then samples
@@ -1738,8 +1741,9 @@ def _interpret_content(
             if nbytes > (1 << 24) or i2 + nbytes > n:
                 raise ValueError("pdf: inline image truncated")
             lx.i = i2 + nbytes
-            if lx._read_token_word() != b"EI":
+            if not lx.keyword(b"EI"):
                 raise ValueError("pdf: inline image missing EI")
+            i = lx.i
         elif op == b"q":
             # font and size are graphics-state per ISO 32000-1 Table 52:
             # a Tf inside q..Q must not leak past the matching Q, or
@@ -1751,7 +1755,7 @@ def _interpret_content(
             else:
                 ctm = _IDENT
         elif op == b"cm":
-            ctm = _mat_mul(tuple(float(v) for v in stack[-6:]), ctm)
+            ctm = _mat_mul(tuple(map(float, stack[-6:])), ctm)
         # every other operator just consumes its operands
         stack.clear()
     return spans

@@ -211,8 +211,9 @@ def extract_pdf_spans(pdf_df: DataFrame) -> DataFrame:
     """(doc_id, content) → interleaved spans in READING order.
 
     ``seq`` is the document-global reading-order index (page-major).
-    Poison rows (encrypted, unsupported filter, truncated, malformed
-    syntax or cross-reference) become a single ``kind='error'`` row carrying the
+    Poison rows (encrypted with a non-empty user password or another
+    security handler, unsupported filter, truncated, malformed syntax or
+    cross-reference) become a single ``kind='error'`` row carrying the
     reason in ``text`` — the stage never dies on one bad document; the
     caller routes those to quarantine exactly like the media codecs'
     contract (SURVEY §2.1 S11).

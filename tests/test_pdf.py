@@ -1125,6 +1125,135 @@ def test_pdf_recursion_bomb_quarantined_by_both_operators(spark, tmp_path):
     assert errs == bad
 
 
+_STRAY_DELIMITERS = [b")", b"]", b"}", b"{", b">"]
+
+
+def _stray_delimiter_pdf(delim: bytes) -> bytes:
+    """A raw single-stream PDF whose content stream has ``delim`` in
+    operator position between two text objects (the newline after the
+    first ``ET`` is overwritten, so no offset or /Length moves)."""
+    pdf = encode_pdf(PAGES[:1], seed=3, variant=0)
+    cut = pdf.index(b"ET\n", pdf.index(b"stream")) + 2
+    return pdf[:cut] + delim + pdf[cut + 1 :]
+
+
+@pytest.mark.parametrize("delim", _STRAY_DELIMITERS)
+def test_stray_delimiter_in_content_stream_is_poison(delim):
+    """A delimiter no object starts with, in operator position, is a
+    syntax error: the page must not end there with every later span
+    silently dropped."""
+    content = (
+        b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (first) Tj ET\n"
+        + delim
+        + b" BT /F1 12 Tf 1 0 0 1 72 680 Tm (second) Tj ET"
+    )
+    with pytest.raises(ValueError, match=r"unexpected delimiter .* at 45$"):
+        extract_page_spans(content)
+
+
+def test_stray_delimiter_pdf_quarantined(spark):
+    """The same poison inside real PDFs is quarantined by the operator."""
+    from donut_spark.operators.pdfparse import (
+        PDF_TABLE_SCHEMA,
+        pdf_documents_from_table,
+    )
+
+    rows = [(d.decode(), _stray_delimiter_pdf(d)) for d in _STRAY_DELIMITERS]
+    rows.append(("clean", _stray_delimiter_pdf(b"\n")))
+    got = {
+        r.doc_id: r._error
+        for r in pdf_documents_from_table(
+            spark.createDataFrame(rows, schema=PDF_TABLE_SCHEMA)
+        ).collect()
+    }
+    assert got.pop("clean") is None
+    assert sorted(got) == sorted(d.decode() for d in _STRAY_DELIMITERS)
+    for d, err in got.items():
+        assert (err or "").startswith(f"pdf: unexpected delimiter {d.encode()!r} at "), err
+
+
+# every writer shape: the four content encodings over both
+# cross-reference forms, compression, both font paths, each filter
+# chain, each encryption mode and a rotated page
+_FUZZ_SHAPES = (
+    [
+        dict(variant=v, xref_stream=x, compress=c)
+        for v in range(4)
+        for x, c in ((False, False), (True, True))
+    ]
+    + [dict(cid_font=True, variant=1), dict(simple_encoding="differences")]
+    + [
+        dict(stream_filter=f, variant=2)
+        for f in ("lzw", "rl", "a85flate", "a85rl", "ahxlzw")
+    ]
+    + [dict(encrypt=e) for e in ("rc4-40", "rc4-128", "aesv2", "aes256")]
+    + [dict(rotate=90, xref_stream=True)]
+)
+_FUZZ_INSERTS = [b"(", b"[", b"<<", b")", b"%"]
+
+
+def _fuzz_controls() -> list:
+    return [encode_pdf(PAGES, seed=k, **shape) for k, shape in enumerate(_FUZZ_SHAPES)]
+
+
+def _mutated_pdfs(bases: list, n: int, seed: int) -> list:
+    """``n`` seeded mutations of ``bases``: one to three byte flips,
+    truncations or inserted ``(``, ``[``, ``<<``, ``)`` or ``%`` each."""
+    rng = random.Random(seed)
+    out = []
+    for _ in range(n):
+        data = bytearray(rng.choice(bases))
+        for _ in range(rng.randint(1, 3)):
+            pos = rng.randrange(len(data))
+            op = rng.random()
+            if op < 0.4:
+                data[pos] ^= 1 << rng.randrange(8)
+            elif op < 0.5:
+                del data[pos:]
+            else:
+                data[pos:pos] = rng.choice(_FUZZ_INSERTS)
+            if not data:
+                break
+        out.append(bytes(data))
+    return out
+
+
+def test_seeded_pdf_fuzz_never_fails_the_operator(spark):
+    """2000 seeded mutations of every writer shape through
+    ``pdf_documents_from_table``: the job completes, every input comes
+    back as exactly one row with exactly one of ``extracted`` /
+    ``_error``, and the unmutated controls still parse to their spans.
+    The parser runs only in the Spark workers (default recursion
+    limit); see ``_recursion_bomb_pdf``."""
+    from donut_spark.operators.pdfparse import (
+        PDF_TABLE_SCHEMA,
+        pdf_documents_from_table,
+    )
+
+    controls = _fuzz_controls()
+    fuzz = _mutated_pdfs(controls, 2000, seed=20260)
+    rows = [(f"f{k}", d) for k, d in enumerate(fuzz)]
+    rows += [(f"c{k}", d) for k, d in enumerate(controls)]
+    got = pdf_documents_from_table(
+        spark.createDataFrame(rows, schema=PDF_TABLE_SCHEMA, verifySchema=False)
+    ).collect()
+
+    assert sorted(r.doc_id for r in got) == sorted(doc_id for doc_id, _ in rows)
+    assert all((r.extracted is None) != (r._error is None) for r in got)
+    want = [
+        (kind, payload if kind == "text" else "", payload if kind == "media" else "", k)
+        for k, (kind, _x, _y, _size, payload) in enumerate(
+            s for page in PAGES for s in page
+        )
+    ]
+    for r in got:
+        if r.doc_id.startswith("c"):
+            assert r._error is None, (r.doc_id, r._error)
+            assert [tuple(s) for s in r.extracted] == want, r.doc_id
+    n_err = sum(r._error is not None for r in got)
+    assert 0 < n_err < len(fuzz)
+
+
 def test_pdf_passthrough_columns_ride_the_kernel(spark, tmp_path):
     """Passthrough columns (resume mode's ``_bucket``) ride through the
     parse kernel: one scan, no join, and exactly one output row per
