@@ -36,7 +36,6 @@ from ..core import htmlnorm, metrics, textstats, tree
 
 __all__ = [
     "main_content_udf",
-    "clean_table",
     "repair_table",
     "json2token_udf",
     "token2json_udf",
@@ -204,12 +203,6 @@ def main_content_udf(html: pd.Series) -> pd.Series:
     pruning (kill tags, boilerplate names, link-density) before the
     reference normalization passes."""
     return html.map(lambda h: htmlnorm.extract_main_content(h or ""))
-
-
-@F.pandas_udf(StringType())
-def clean_table(html: pd.Series) -> pd.Series:
-    """`remove_tag_in_table_cell` parity (html_util.py:181-187)."""
-    return html.map(lambda h: htmlnorm.clean_table_html(h or ""))
 
 
 @F.pandas_udf(StringType())

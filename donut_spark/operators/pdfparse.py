@@ -10,21 +10,27 @@ span sequence ``(kind, text, media_ref, order)`` the rest of the
 pipeline consumes — reading order recovered from device-space layout
 (page, top-to-bottom line, left-to-right x), NOT stream emission order.
 
-Scale shape: the parse is a ``mapInPandas`` Arrow kernel over the
-binary column — map-only, zero shuffle, embarrassingly parallel; the
-poison-row contract (any unsupported construct → a single ``error``
-span row, never a dead stage) is the same one the PNG/JPEG/VP8 codecs
-follow. The synth writer is deterministic in ``doc_id`` alone, so the
-q55 oracle recomputes every page/coordinate/text value from the spans
+Two operators share one parse and one poison boundary
+(:func:`_parse_each`), each a map-only ``mapInPandas`` Arrow kernel over
+the binary column — zero shuffle, embarrassingly parallel:
+
+* :func:`pdf_documents_from_table` is the extraction operator: one row
+  per document with ``extracted`` and ``_error``, the spans operator's
+  contract, batch or streaming input alike;
+* :func:`extract_pdf_spans` is the layout view: one row per span with
+  its page and position, and a poison document as a single
+  ``kind='error'`` row. q55 checks those positions.
+
+The synth writer is deterministic in ``doc_id`` alone, so the q55
+oracle recomputes every page/coordinate/text value from the spans
 fixture with closed-form SQL arithmetic — no PDF code on the SQL side.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+from typing import Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -42,7 +48,6 @@ __all__ = [
     "doc_layout_pages",
     "synth_pdf_table",
     "extract_pdf_spans",
-    "pdf_extract_documents",
     "pdf_documents_from_table",
 ]
 
@@ -196,41 +201,47 @@ def synth_pdf_table(spark: SparkSession, spans_df: DataFrame) -> DataFrame:
     return src.mapInPandas(gen, schema=PDF_TABLE_SCHEMA)
 
 
-def _poison_reason(exc: Exception) -> str:
-    """The ``_error`` / error-span text of a PDF the parser refused.
-    ``ValueError`` is the parser's own poison signal and keeps its bare
-    message (the q55 hash and the reason tests read it); any other class
-    escaping the parser (e.g. ``RecursionError`` on deeply nested
-    arrays) is named, as in the spans UDF's error channel."""
-    if isinstance(exc, ValueError):
-        return str(exc)
-    return f"{type(exc).__name__}: {exc}"
+def _parse_each(contents) -> Iterator[Tuple[Optional[list], Optional[str]]]:
+    """The poison boundary of both PDF kernels: each PDF's bytes →
+    ``(pages, None)``, or ``(None, reason)`` for a document the parser
+    refused. Every exception is caught, so one bad document never fails
+    the stage. ``ValueError`` is the parser's own poison signal and
+    keeps its bare message (the q55 hash and the reason tests read it);
+    any other class escaping the parser (e.g. ``RecursionError`` on
+    deeply nested arrays) is named, as in the spans UDF's error
+    channel."""
+    from ..core.pdf import parse_pdf_spans
+
+    for content in contents:
+        try:
+            pages, reason = parse_pdf_spans(bytes(content)), None
+        except ValueError as e:
+            pages, reason = None, str(e)
+        except Exception as e:  # noqa: BLE001 — quarantine, never fail
+            pages, reason = None, f"{type(e).__name__}: {e}"
+        yield pages, reason
 
 
 def extract_pdf_spans(pdf_df: DataFrame) -> DataFrame:
-    """(doc_id, content) → interleaved spans in READING order.
+    """(doc_id, content) → interleaved spans in READING order, one row
+    per span with its layout position (``page``, ``x``, ``y``,
+    ``size``) — the layout view q55 checks.
 
     ``seq`` is the document-global reading-order index (page-major).
     Poison rows (encrypted with a non-empty user password or another
     security handler, unsupported filter, truncated, malformed syntax or
     cross-reference) become a single ``kind='error'`` row carrying the
-    reason in ``text`` — the stage never dies on one bad document; the
-    caller routes those to quarantine exactly like the media codecs'
-    contract (SURVEY §2.1 S11).
+    reason in ``text``; the stage never dies on one bad document.
     """
 
     def parse(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        from ..core.pdf import parse_pdf_spans
-
         for pdf in batches:
             rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    pages = parse_pdf_spans(bytes(content))
-                except Exception as e:  # noqa: BLE001 — quarantine, never fail
-                    reason = _poison_reason(e)
+            parsed = _parse_each(pdf["content"])
+            for doc_id, (pages, reason) in zip(pdf["doc_id"], parsed):
+                if pages is None:
                     rows.append(
                         (doc_id, -1, -1, "error", reason, None, 0.0, 0.0, 0.0)
                     )
@@ -265,55 +276,6 @@ def extract_pdf_spans(pdf_df: DataFrame) -> DataFrame:
     return pdf_df.mapInPandas(parse, schema=PDF_SPANS_SCHEMA)
 
 
-def pdf_extract_documents(
-    spark: SparkSession, spans_df: DataFrame
-) -> DataFrame:
-    """Full PDF-modality round trip in the flagship's input shape.
-
-    spans fixture → real PDF bytes → layout parse → per-document
-    ``extracted`` arrays (kind, text, media_ref, offset — offsets dense
-    in reading order, empty strings where the fixture uses them), joined
-    back onto the input columns. The result is exactly what
-    ``operators.extract.evaluate_extraction`` consumes, so the flagship
-    metrics — span-sequence exact match, token round-trip, nTED — run
-    UNCHANGED over the PDF path; a layout bug surfaces as
-    ``exact_match = 0``, not a schema error.
-
-    Scale shape: two map-only Arrow kernels, one per-doc aggregation,
-    one equi-join back on ``doc_id`` — the join is doc_id↔doc_id on
-    co-partitioned shuffle output, no broadcast needed and no skew
-    (every PDF's span list is the document's own size).
-    """
-    parsed = extract_pdf_spans(synth_pdf_table(spark, spans_df))
-    docs = _reassemble_documents(parsed)
-    return spans_df.join(docs, "doc_id", "left")
-
-
-def _reassemble_documents(parsed: DataFrame) -> DataFrame:
-    """Parsed span rows → one row per doc with the ``extracted`` array
-    in the fixture's exact span shape (dense reading-order offsets,
-    empty strings where the fixture uses them)."""
-    return (
-        parsed.filter(F.col("kind") != "error")
-        .groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("seq", "kind", "text", "media_ref")
-                    )
-                ),
-                lambda s: F.struct(
-                    s.kind.alias("kind"),
-                    F.coalesce(s.text, F.lit("")).alias("text"),
-                    F.coalesce(s.media_ref, F.lit("")).alias("media_ref"),
-                    s.seq.alias("offset"),
-                ),
-            ).alias("extracted")
-        )
-    )
-
-
 PDF_DOCS_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
@@ -336,42 +298,32 @@ PDF_DOCS_SCHEMA = StructType(
 
 
 def pdf_documents_from_table(pdf_df: DataFrame) -> DataFrame:
-    """Production-input twin of :func:`pdf_extract_documents`: a table
-    of REAL PDFs ``(doc_id, content binary [, passthrough cols])`` →
-    one row per input row with the extracted interleaved span array and
-    an ``_error`` column (null = parsed; non-null = the poison reason)
-    — exactly ``plans.lineage.quarantine_split``'s input shape, so
+    """The PDF extraction operator: a table of REAL PDFs ``(doc_id,
+    content binary [, passthrough cols])`` → one row per input row with
+    the extracted interleaved span array and an ``_error`` column (null
+    = parsed; non-null = the poison reason, see :func:`_parse_each`) —
+    exactly ``plans.lineage.quarantine_split``'s input shape, so
     ``submit/run_extract.py --modality pdf`` routes bad documents to
-    quarantine/ and never dies on one (S11). Any exception the parser
-    raises is a poison reason (see :func:`_poison_reason`).
-    Passthrough columns (e.g. the resume path's ``_bucket``) ride
-    through the kernel in their own row; the PDF bytes are dropped from
-    the output.
+    quarantine/ and never dies on one (S11). Passthrough columns (e.g.
+    the resume path's ``_bucket``) ride through the kernel in their own
+    row; the PDF bytes are dropped from the output. A streaming input
+    (``spark.readStream``) gives the same rows per micro-batch.
 
-    Scale/plan shape: ONE map-only Arrow kernel parses each document
-    exactly once and emits the finished per-doc row — a PDF's spans
-    already live in its own input row, so reading order is reassembled
-    inside the kernel instead of through a collect_list/array_sort
-    aggregation, and passthrough columns need no join back on
-    ``doc_id``: one scan, zero shuffles, one output row per input row
-    even when a ``doc_id`` repeats (plans/r06/
-    pdf_parse_{before,after}.txt: 2 MapInPandas + 1 Exchange → 1
-    MapInPandas + 0 Exchange).
+    Plan shape: one map-only Arrow kernel (one ``MapInPandas``, no
+    ``Exchange``) parses each document exactly once and emits the
+    finished per-doc row, reading order and all; one output row per
+    input row even when a ``doc_id`` repeats.
     """
 
     def parse_docs(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        from ..core.pdf import parse_pdf_spans
-
         for pdf in batches:
             extracted, errors = [], []
-            for content in pdf["content"]:
-                try:
-                    pages = parse_pdf_spans(bytes(content))
-                except Exception as e:  # noqa: BLE001 — quarantine, never fail
+            for pages, reason in _parse_each(pdf["content"]):
+                errors.append(reason)
+                if pages is None:
                     extracted.append(None)
-                    errors.append(_poison_reason(e))
                     continue
                 spans = []
                 seq = 0
@@ -397,7 +349,6 @@ def pdf_documents_from_table(pdf_df: DataFrame) -> DataFrame:
                             )
                         seq += 1
                 extracted.append(spans)
-                errors.append(None)
             out = pdf.drop(columns="content")
             out["extracted"] = pd.Series(extracted, index=out.index, dtype=object)
             out["_error"] = pd.Series(errors, index=out.index, dtype=object)

@@ -1,1 +1,2 @@
-"""Structured Streaming variant of the extraction pipeline."""
+"""Structured Streaming operators; stream ingest is the batch extraction
+operators applied to a ``spark.readStream`` frame."""

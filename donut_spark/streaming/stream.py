@@ -1,12 +1,17 @@
-"""Streaming extraction (SURVEY.md §2.10).
+"""Structured Streaming operators (SURVEY.md §2.10).
 
 The reference is pure batch; the closest streaming analogue is its
-infinite online synthesizer (`donut/util.py:453-502`). The per-document
-pipeline is stateless projection + UDFs, so the streaming variant needs
-no watermarks or stateful operators: any micro-batch source works with
-the identical column pipeline. Provided for incremental ingest
-(Iceberg incremental reads / file streams in production; a file stream
-or rate source here).
+infinite online synthesizer (`donut/util.py:453-502`). Stream ingest
+needs no operator of its own: the per-document extraction operators
+(``operators.extract.extract_documents`` for spans tables,
+``operators.pdfparse.pdf_documents_from_table`` for PDF tables) are
+stateless projections, so each applies unchanged to a
+``spark.readStream`` frame and gives the batch rows, ``_error``
+included, per micro-batch. A checkpointed ``writeStream`` sink gives
+exactly-once ingest (Iceberg incremental reads / file streams in
+production; a file stream here). This module holds the operators that
+only a stream needs: watermarked windows, stateful sessionization,
+watermark-bounded dedup and the ingest-time contamination filter.
 """
 
 from __future__ import annotations
@@ -15,14 +20,9 @@ from __future__ import annotations
 # type hints against the defining module's globals — a local import
 # inside the factory fails with UNSUPPORTED_SIGNATURE
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-
-from ..operators.extract import extract_documents
-from ..sources.fixtures import SPANS_TABLE_SCHEMA
+from pyspark.sql import DataFrame
 
 __all__ = [
-    "stream_extract_from_files",
-    "stream_pdf_extract_from_files",
     "windowed_event_counts",
     "sessionize",
     "streaming_exact_dedup",
@@ -48,49 +48,6 @@ def java_ws_shingles(text: str | None, n: int) -> list:
     words = [w for w in _JAVA_WS.split((text or "").lower()) if w]
     top = max(len(words) - n, 0)
     return [s for s in (" ".join(words[i : i + n]) for i in range(top + 1)) if s]
-
-
-def stream_extract_from_files(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 4
-) -> DataFrame:
-    """File-stream source of spans-table parquet → streaming extraction.
-
-    Returns a streaming DataFrame; attach a sink with
-    ``.writeStream.format("parquet").option("checkpointLocation", ...)``
-    — the checkpoint gives exactly-once per micro-batch, the streaming
-    twin of `operators/checkpoint.py`.
-    """
-    source = (
-        spark.readStream.schema(SPANS_TABLE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return extract_documents(source)
-
-
-def stream_pdf_extract_from_files(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 4
-) -> DataFrame:
-    """Streaming twin of ``run_extract --modality pdf``: a file stream
-    of PDF tables ``(doc_id, content binary)`` parsed incrementally by
-    the layout codec.
-
-    The parse kernel is per-row stateless (``extract_pdf_spans``'s
-    ``mapInPandas``), so no watermark or state store is needed and the
-    batch/stream plans are identical above the source — micro-batch
-    checkpointing gives exactly-once ingest of a landing zone of native
-    documents. Poison PDFs surface as ``kind='error'`` rows in-stream;
-    route them to a quarantine sink with a filter, same contract as the
-    batch path.
-    """
-    from ..operators.pdfparse import PDF_TABLE_SCHEMA, extract_pdf_spans
-
-    source = (
-        spark.readStream.schema(PDF_TABLE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return extract_pdf_spans(source)
 
 
 def windowed_event_counts(

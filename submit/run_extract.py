@@ -67,6 +67,7 @@ def main() -> None:
     # Imports AFTER argparse: on an executor-shipped zip this module is
     # driver-side, but failing fast on bad args shouldn't need the JVM.
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from donut_spark.sources.session import ENGINE_CONF
 
@@ -98,7 +99,9 @@ def main() -> None:
         from donut_spark.operators.sink import write_outputs
 
         write_outputs(spark, extract(spans), args.output)
-    n = spark.read.parquet(f"{args.output}/data").count()
+    # lineage/ counts every row of data/: no second scan of the output
+    lineage = spark.read.parquet(f"{args.output}/lineage")
+    n = lineage.agg(F.sum("n_docs")).first()[0] or 0
     print(f"extracted {n} documents -> {args.output}/data")
     # leak audit: the sink's persist is released after its consumers —
     # repeated runs must stay flat

@@ -492,7 +492,9 @@ def test_capture_survives_transformation(planted):
     assert release_persisted(transformed) == 0  # attribute style: lost
     assert len(res.handles) == 1                # tuple style: retained
     assert res.release() == 1
-    assert persistent_rdd_ids(sc) == before     # zero stranded blocks
+    # no NEW persisted RDD: another test's late unpersist may shrink the
+    # process-global set below the snapshot, so compare as a subset
+    assert persistent_rdd_ids(sc) <= before     # zero stranded blocks
 
     # capture() pops the attribute — exactly one owner, old-style
     # release on the original frame is a no-op after capture
@@ -500,7 +502,7 @@ def test_capture_survives_transformation(planted):
     assert release_persisted(res2.frame) == 0
     res2.frame.collect()
     res2.release()
-    assert persistent_rdd_ids(sc) == before
+    assert persistent_rdd_ids(sc) <= before
 
 
 def test_shingle_plan_single_split(spark):

@@ -993,20 +993,24 @@ def test_pdf_operator_quarantines_poison_rows(spark):
 
 def test_pdf_modality_through_flagship_metrics(spark):
     """The PDF path plugs into the SAME evaluator as the HTML path:
-    evaluate_extraction over pdf_extract_documents must give
-    exact_match = 1, roundtrip_ok = 1 and nTED = 1.0 for every doc —
-    the north rule's per-row invariant, end to end through real PDF
-    bytes."""
+    evaluate_extraction over pdf_documents_from_table joined back to the
+    truth columns must give exact_match = 1, roundtrip_ok = 1 and
+    nTED = 1.0 for every doc — the north rule's per-row invariant, end
+    to end through real PDF bytes."""
     from pyspark.sql import functions as F
 
     from donut_spark.operators.extract import evaluate_extraction
-    from donut_spark.operators.pdfparse import pdf_extract_documents
+    from donut_spark.operators.pdfparse import (
+        pdf_documents_from_table,
+        synth_pdf_table,
+    )
     from donut_spark.sources.fixtures import load_spans
 
     spans = load_spans(spark, "/root/testdata/sf0.001").filter(
         F.col("doc_id").cast("long") < 40
     )
-    ev = evaluate_extraction(pdf_extract_documents(spark, spans))
+    docs = pdf_documents_from_table(synth_pdf_table(spark, spans))
+    ev = evaluate_extraction(spans.join(docs, "doc_id", "left"))
     agg = ev.agg(
         F.count("*").alias("n"),
         F.sum("exact_match").alias("n_exact"),
@@ -1283,6 +1287,7 @@ def test_pdf_passthrough_columns_ride_the_kernel(spark, tmp_path):
     out = pdf_documents_from_table(table)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
     assert "Join" not in plan and "Exchange" not in plan, plan
     assert out.columns == ["doc_id", "_bucket", "extracted", "_error"]
     rows = sorted((r.doc_id, r._bucket) for r in out.collect())
@@ -1308,20 +1313,19 @@ def test_materialize_pdf_table_writes_under_out_root(spark, tmp_path):
 
 
 def test_streaming_pdf_ingest_matches_batch(spark, tmp_path):
-    """The streaming PDF ingest twin is the same stateless kernel above
-    a file-stream source: per-span rows match the batch parse exactly,
-    and a poison PDF flows through as kind='error' without killing the
-    query."""
+    """Stream ingest is the batch operator over a ``readStream`` frame:
+    ``pdf_documents_from_table`` gives the batch rows exactly, and a
+    poison PDF lands in ``_error`` without killing the query, so the
+    streamed rows split through ``quarantine_split`` like a batch run's."""
     from pyspark.sql import functions as F
 
-    from donut_spark.core.pdf import encode_pdf
     from donut_spark.operators.pdfparse import (
         PDF_TABLE_SCHEMA,
-        extract_pdf_spans,
+        pdf_documents_from_table,
         synth_pdf_table,
     )
+    from donut_spark.plans.lineage import quarantine_split
     from donut_spark.sources.fixtures import load_spans
-    from donut_spark.streaming.stream import stream_pdf_extract_from_files
 
     src = str(tmp_path / "pdf_stream_src")
     sink = str(tmp_path / "pdf_stream_sink")
@@ -1336,8 +1340,13 @@ def test_streaming_pdf_ingest_matches_batch(spark, tmp_path):
     pdfs = synth_pdf_table(spark, spans).union(poison)
     pdfs.write.parquet(src)
 
+    stream = (
+        spark.readStream.schema(PDF_TABLE_SCHEMA)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
     q = (
-        stream_pdf_extract_from_files(spark, src, max_files_per_trigger=2)
+        pdf_documents_from_table(stream)
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
@@ -1346,11 +1355,20 @@ def test_streaming_pdf_ingest_matches_batch(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = spark.read.parquet(sink)
-    want = extract_pdf_spans(spark.read.parquet(src))
+    want = pdf_documents_from_table(spark.read.parquet(src))
+    assert got.count() == 31
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
-    errs = got.filter(F.col("kind") == "error")
-    assert [r["doc_id"] for r in errs.collect()] == ["poison_doc"]
+
+    good, bad = quarantine_split(got)
+    want_good, want_bad = quarantine_split(want)
+    bad_rows = bad.select("doc_id", "_error").collect()
+    assert [r.doc_id for r in bad_rows] == ["poison_doc"]
+    assert bad_rows[0]._error == want_bad.first()._error
+    assert "startxref" in bad_rows[0]._error
+    assert good.count() == 30
+    assert good.exceptAll(want_good).count() == 0
+    assert want_good.exceptAll(good).count() == 0
 
 
 def test_layout_pages_arithmetic():

@@ -459,10 +459,20 @@ def test_poison_doc_quarantined_not_fatal(spark):
         assert g.n == 7 and g.em == 1.0
 
 
-def test_streaming_extraction(spark, tmp_path):
-    """Micro-batch streaming twin produces the same rows as batch."""
-    from donut_spark.streaming.stream import stream_extract_from_files
+def _spans_stream(spark, src):
+    """A file stream of spans-table parquet, two files per micro-batch."""
+    from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA
 
+    return (
+        spark.readStream.schema(SPANS_TABLE_SCHEMA)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
+
+
+def test_streaming_extraction(spark, tmp_path):
+    """The batch operator over a ``readStream`` frame produces the same
+    rows as batch."""
     src = str(tmp_path / "stream_src")
     sink = str(tmp_path / "stream_sink")
     ckpt = str(tmp_path / "stream_ckpt")
@@ -470,7 +480,7 @@ def test_streaming_extraction(spark, tmp_path):
     batch.write.parquet(src)
 
     q = (
-        stream_extract_from_files(spark, src, max_files_per_trigger=2)
+        extract_documents(_spans_stream(spark, src))
         .select("doc_id", "extracted")
         .writeStream.format("parquet")
         .option("path", sink)
@@ -481,13 +491,17 @@ def test_streaming_extraction(spark, tmp_path):
     q.awaitTermination(120)
     out = spark.read.parquet(sink)
     assert out.count() == 40
+    want = extract_documents(spark.read.parquet(src)).select(
+        "doc_id", "extracted"
+    )
+    assert out.exceptAll(want).count() == 0
+    assert want.exceptAll(out).count() == 0
 
 
 def test_streaming_poison_doc_survives(spark, tmp_path):
     """A streaming query must never die on one bad record: the poison doc
     flows to the _error column, healthy docs keep extracting."""
     from donut_spark.sources.fixtures import SPANS_TABLE_SCHEMA, synth_doc
-    from donut_spark.streaming.stream import stream_extract_from_files
 
     src = str(tmp_path / "poison_src")
     sink = str(tmp_path / "poison_sink")
@@ -504,7 +518,7 @@ def test_streaming_poison_doc_survives(spark, tmp_path):
     spark.createDataFrame(rows, SPANS_TABLE_SCHEMA).write.parquet(src)
 
     q = (
-        stream_extract_from_files(spark, src, max_files_per_trigger=2)
+        extract_documents(_spans_stream(spark, src))
         .select("doc_id", "extracted", "_error")
         .writeStream.format("parquet")
         .option("path", sink)
